@@ -29,26 +29,42 @@ eager AND lazy loops):
   charging per-stage latency for it; above the threshold AQE stays on
   and keeps its skew-join splitting and coalescing.
 
-The row count comes from `known_rows(df)`: a count OBSERVED for free
-on a checkpoint materialization job that was running anyway
-(`__spark_entry__._cached` stamps it; `observed_ckpt_eager` below does
-the same for operator-internal state), or a parquet-footer read for
-artifact-store tables. No extra Spark job is ever run to size the
-scope, and an unknown count means NO scoping -- session defaults, the
-safe cluster posture (the multimodal.python_stage_parallelism
-discipline: degrade to full scale-out, never below).
+The row count comes from `known_rows(df)`, an exact count stamped on
+the DataFrame by whoever observed it:
+
+- `__spark_entry__._cached` observes it with an `Observation` on the
+  checkpoint materialization job that runs anyway (zero extra jobs);
+- `webgraph.ranks` counts its host-edge input once -- the count the
+  rank ordinal's bucket ranker needed anyway -- and stamps it before
+  calling `graph.pagerank`;
+- operators that project a stamped table re-stamp the count through
+  the projection (`dedup`, `webgraph.ranks`).
+
+Nothing reads parquet footers: tables read back from the artifact
+store (`plans.pipeline.ArtifactStore`, the SPARK_GRAFT_ARTIFACT_DIR
+branch of `_cached`) and pipeline step outputs carry no count, so
+loops over them run unscoped unless the caller counts. An unknown count
+means NO scoping -- session defaults, the safe cluster posture (degrade
+to full scale-out, never below).
+
+The session conf is global, so `small_state_scope` holds a module lock
+while it is open: two threads' scopes never interleave their
+save/restore, and the session's own values come back when the
+outermost scope closes. Other threads' queries still see the scoped
+values while a scope is open.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-from .checkpointing import stable_checkpoint
-
 _ROWS_ATTR = "_ccs_known_rows"
+# re-entrant: a scoped loop may build another scoped loop inside it
+_SCOPE_LOCK = threading.RLock()
 
 
 def stamp_rows(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -65,23 +81,6 @@ def known_rows(df: DataFrame) -> int | None:
     return int(n) if n is not None else None
 
 
-def observed_ckpt_eager(df: DataFrame) -> DataFrame:
-    """Eagerly checkpoint `df` and stamp its exact row count, observed
-    on the materialization job itself (zero extra jobs)."""
-    from pyspark.sql import Observation, functions as F
-
-    obs = Observation()
-    out = stable_checkpoint(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), eager=True
-    )
-    try:
-        n = obs.get["n"]
-    except Exception:
-        # SPARK_GRAFT_NO_CKPT plan-inspection escape: nothing ran
-        n = None
-    return stamp_rows(out, n)
-
-
 def _env_int(name: str, default: int) -> int:
     try:
         return int(os.environ.get(name, default))
@@ -89,29 +88,47 @@ def _env_int(name: str, default: int) -> int:
         return default
 
 
+def _as_int(value: str | None) -> int | None:
+    # session values such as "auto" are not a partition count
+    try:
+        return int(value)
+    except (TypeError, ValueError):
+        return None
+
+
+def partitions_for_rows(n_rows: int) -> int:
+    """ceil(n_rows / SPARK_GRAFT_LOOP_ROWS_PER_PART), at least 1: the
+    number of partitions (or ranker buckets) `n_rows` rows need."""
+    rows_per_part = max(1, _env_int("SPARK_GRAFT_LOOP_ROWS_PER_PART", 200_000))
+    return max(1, -(-int(n_rows) // rows_per_part))
+
+
 @contextmanager
 def small_state_scope(spark, n_rows: int | None):
     """Scope loop shuffles to `n_rows` of state (see module docstring).
 
     No-op when `n_rows` is None (unknown size: keep cluster defaults)
-    or when the state is too large for either adjustment.
+    or when the state is too large for either adjustment. A session
+    partition count that is not an integer (e.g. "auto") is left as
+    it is.
     """
     if n_rows is None or os.environ.get("SPARK_GRAFT_LOOP_SCOPE") == "off":
         # unknown size, or the A/B escape hatch: keep session defaults
         yield
         return
     conf = spark.conf
-    rows_per_part = _env_int("SPARK_GRAFT_LOOP_ROWS_PER_PART", 200_000)
     small_rows = _env_int("SPARK_GRAFT_LOOP_SMALL_ROWS", 4_000_000)
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    target = max(1, -(-int(n_rows) // rows_per_part))
-    try:
-        if target < int(prev_parts):
-            conf.set("spark.sql.shuffle.partitions", str(target))
-        if int(n_rows) < small_rows:
-            conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_parts)
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    target = partitions_for_rows(n_rows)
+    with _SCOPE_LOCK:
+        prev_parts = conf.get("spark.sql.shuffle.partitions")
+        prev_aqe = conf.get("spark.sql.adaptive.enabled")
+        try:
+            session_parts = _as_int(prev_parts)
+            if session_parts is not None and target < session_parts:
+                conf.set("spark.sql.shuffle.partitions", str(target))
+            if int(n_rows) < small_rows:
+                conf.set("spark.sql.adaptive.enabled", "false")
+            yield
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev_parts)
+            conf.set("spark.sql.adaptive.enabled", prev_aqe)

@@ -166,6 +166,20 @@ def pagerank(
     SPARK_GRAFT_CHECKPOINT_DIR is set (checkpointing.py), local
     otherwise.
     """
+    return pagerank_fixed_point(edges, iterations, damp_num, damp_den).select(
+        "node", F.round(F.col("rank_i") / RANK_SCALE, 6).alias("rank")
+    ).orderBy("node")
+
+
+def pagerank_fixed_point(
+    edges: DataFrame,
+    iterations: int = 3,
+    damp_num: int = 85,
+    damp_den: int = 100,
+) -> DataFrame:
+    """`pagerank`'s loop: (node, rank_i) with the fixed-point bigint
+    rank, in no particular order. For consumers that re-rank the
+    nodes themselves (webgraph.ranks) and would discard the sort."""
     base_i = (damp_den - damp_num) * RANK_SCALE // damp_den  # 0.15
     # loop-state shuffles sized to the DATA, not the session's core
     # count (r10-opt: lazy localCheckpoint compiles -- and captures
@@ -208,9 +222,7 @@ def pagerank(
                 )
                 .transform(ckpt_lazy)
             )
-    return ranks.select(
-        "node", F.round(F.col("rank_i") / RANK_SCALE, 6).alias("rank")
-    ).orderBy("node")
+    return ranks
 
 
 def _self_rows(nodes: DataFrame) -> DataFrame:

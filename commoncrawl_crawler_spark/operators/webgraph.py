@@ -21,11 +21,15 @@ lineage — all public) rolls those up:
 
 Everything here is Column expressions + two groupBys; the PSL
 collapse is `functions/urls.root_domain_expr` (codegen'd isin probe,
-no Python). Dense-id assignment deliberately avoids the
-`row_number() OVER (ORDER BY name)` single-partition trap: it
-range-partitions names, counts per partition (one bounded collect of
-n_partitions rows), and offsets per-partition ranks — the standard
-distributed zipWithIndex, so the sort stays parallel at any scale.
+no Python). Dense ranks (node ids, rank ordinals) come from one
+ranker, `with_key_rank`, sized by the key count: ceil(keys /
+SPARK_GRAFT_LOOP_ROWS_PER_PART) buckets, capped. A small key set is
+the one-bucket case — a single window, no driver collect. A large one
+buckets the keys on cut points from a bounded sample and offsets
+per-bucket window ranks by per-bucket counts (one bounded collect of
+one row per bucket) — the standard distributed zipWithIndex, so the
+sort stays parallel at any scale instead of funnelling every key
+through the one task of `row_number() OVER (ORDER BY name)`.
 """
 
 from __future__ import annotations
@@ -34,6 +38,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from commoncrawl_crawler_spark.functions import urls
+from commoncrawl_crawler_spark.loopscope import (
+    known_rows,
+    partitions_for_rows,
+    stamp_rows,
+)
 
 
 def host_graph(links: DataFrame, src_col: str = "src_host",
@@ -133,19 +142,19 @@ def dense_node_ids(edges: DataFrame, src_col: str, dst_col: str,
     node-name list (0-based) — the id assignment succinct graph
     formats require.
 
-    Scale shape: `row_number() OVER (ORDER BY name)` would funnel
-    every name through ONE task. Instead: freeze ~`buckets` cut
-    points from a bounded, DETERMINISTIC md5-keyed sample of the
-    names (two driver-side collects: one count, one <=
-    ~2*sample_target sample — the same bounded-sample discipline as
-    the IVF trainer), bucket each name against the frozen cuts, add
-    the bucket's prefix-sum offset (one groupBy, `buckets` rows
-    collected) to the within-bucket rank. The result is independent
-    of where the cuts land (skewed cuts only unbalance the
-    per-bucket windows, never change a rank), independent of
-    partitioning, and every per-row stage is parallel — unlike a
-    cached repartitionByRange pipeline, nothing silently corrupts if
-    a recompute resamples boundaries.
+    Scale shape: one count sizes the ranker (`with_key_rank`). Up to
+    SPARK_GRAFT_LOOP_ROWS_PER_PART names are one window. Beyond that,
+    up to `buckets` cut points are frozen from a bounded,
+    DETERMINISTIC md5-keyed sample of the names (one collect of <=
+    ~2*sample_target names — the same bounded-sample discipline as
+    the IVF trainer), each name is bucketed against the frozen cuts,
+    and the bucket's prefix-sum offset (one groupBy, one row per
+    bucket collected) is added to the within-bucket rank. The result
+    is independent of the bucket count and of where the cuts land
+    (skewed cuts only unbalance the per-bucket windows, never change
+    a rank), independent of partitioning, and every per-row stage is
+    parallel — unlike a cached repartitionByRange pipeline, nothing
+    silently corrupts if a recompute resamples boundaries.
     """
     names = (
         edges.select(F.col(src_col).alias("name"))
@@ -160,53 +169,70 @@ def dense_rank_by_key(names: DataFrame, buckets: int = 32,
     """(name, node_id) where node_id = 0-based rank of `name` in the
     globally sorted distinct-name list — the distributed core of
     dense_node_ids, reusable for any orderable string key (e.g. a
-    monotone rank-score encoding)."""
-    n = names.count()
-    if n == 0:
-        return names.select(
-            "name", F.lit(0).cast("long").alias("node_id")
+    monotone rank-score encoding). `names` must hold distinct names;
+    one count job sizes the ranker."""
+    return with_key_rank(
+        names, "name", "node_id", names.count(), buckets, sample_target
+    ).select("name", "node_id")
+
+
+def with_key_rank(df: DataFrame, key_col: str, out_col: str,
+                  max_keys: int, buckets: int = 32,
+                  sample_target: int = 4096) -> DataFrame:
+    """`df` plus `out_col`: the 0-based rank of `key_col` (distinct
+    per row) in the globally sorted key list.
+
+    `max_keys` is an upper bound on the row count. It sizes the
+    ranker: ceil(max_keys / SPARK_GRAFT_LOOP_ROWS_PER_PART) buckets,
+    capped at `buckets`. One bucket is one window over every row — no
+    driver collect at all. More buckets freeze cut points from a
+    bounded, deterministic md5-keyed sample (one collect of <=
+    ~2*sample_target keys), and add each bucket's prefix-sum offset
+    (one collect of one row per bucket) to the within-bucket rank.
+    The ranks do not depend on the bucket count or on where the cuts
+    land: skewed cuts only unbalance the per-bucket windows.
+    """
+    n_buckets = min(buckets, partitions_for_rows(max_keys))
+    cuts: list[str] = []
+    if n_buckets > 1:
+        permille = min(1000, max(1, (2 * sample_target * 1000) // max_keys))
+        sample = sorted(
+            r[0]
+            for r in df.select(key_col)
+            .filter(_md5_permille(F.col(key_col)) < permille)
+            .collect()
         )
-    permille = min(1000, max(1, (2 * sample_target * 1000) // n))
-    sample = sorted(
-        r["name"]
-        for r in names.filter(
-            _md5_permille(F.col("name")) < permille
-        ).collect()
-    )
-    n_cuts = max(0, min(buckets - 1, len(sample) - 1))
-    cuts = (
-        [sample[(i + 1) * len(sample) // (n_cuts + 1)]
-         for i in range(n_cuts)]
-        if n_cuts
-        else []
-    )
+        n_cuts = max(0, min(n_buckets - 1, len(sample) - 1))
+        cuts = [
+            sample[(i + 1) * len(sample) // (n_cuts + 1)]
+            for i in range(n_cuts)
+        ]
     bucket = F.lit(0)
-    for c in cuts:  # name > cut_i for each passed cut => bucket index
-        bucket = bucket + (F.col("name") > F.lit(c)).cast("int")
-    bucketed = names.withColumn("_b", bucket)
-    counts = {
-        r["_b"]: r["c"]
-        for r in bucketed.groupBy("_b").agg(
-            F.count(F.lit(1)).alias("c")
-        ).collect()
-    }
-    offsets, acc = [], 0
-    for b in range(len(cuts) + 1):
-        offsets.append(acc)
-        acc += counts.get(b, 0)
+    for c in cuts:  # key > cut_i for each passed cut => bucket index
+        bucket = bucket + (F.col(key_col) > F.lit(c)).cast("int")
+    bucketed = df.withColumn("_b", bucket)
+    offsets = [0]
+    if cuts:
+        counts = {
+            r["_b"]: r["c"]
+            for r in bucketed.groupBy("_b").agg(
+                F.count(F.lit(1)).alias("c")
+            ).collect()
+        }
+        for b in range(len(cuts)):
+            offsets.append(offsets[-1] + counts.get(b, 0))
     off = F.element_at(
         F.create_map(
             *[F.lit(x) for b, o in enumerate(offsets) for x in (b, o)]
         ),
         F.col("_b"),
     )
-    w = Window.partitionBy("_b").orderBy("name")
+    w = Window.partitionBy("_b").orderBy(key_col)
     # bigint, NOT int: the node table has billions of rows at web
     # scale, and past 2^31-1 an int cast fails under ANSI mode
-    return bucketed.select(
-        "name",
-        (off + F.row_number().over(w) - 1).cast("long").alias("node_id"),
-    )
+    return bucketed.withColumn(
+        out_col, (off + F.row_number().over(w) - 1).cast("long")
+    ).drop("_b")
 
 
 def host_graph_with_ids(links: DataFrame, src_col: str = "src_host",
@@ -248,64 +274,54 @@ def ranks(host_edges: DataFrame, iterations: int = 3) -> DataFrame:
     ordinal by descending score (ties broken by node name, the
     published convention of a deterministic total order).
 
-    PageRank rides operators/graph.pagerank — fixed-point bigint,
-    bit-identical under any partitioning. The rank ordinal
-    deliberately avoids `row_number() OVER (ORDER BY score DESC)`
-    (one global sort task): the score is folded into a MONOTONE
-    string key — zero-padded decimal of (MAX_SCALED - rank_i), then
-    the node name — and ranked with the same bounded-sample bucket
-    ranker that assigns node ids. Sorting that key ascending IS
-    sorting (score DESC, name ASC), so the per-bucket windows stay
-    parallel at any node count.
+    PageRank rides operators/graph.pagerank_fixed_point —
+    fixed-point bigint, bit-identical under any partitioning, and
+    unsorted: both orders below come from the ranker, not from a sort
+    of the pagerank output. Its self rows put every node in that
+    output, so it is also the node list; no second distinct() over
+    the edges. Both the node id (rank of the name) and the rank
+    ordinal (rank of a MONOTONE string key — zero-padded decimal of
+    (10^18 - rank_i), then the node name; sorting it ascending IS
+    sorting (score DESC, name ASC)) are `with_key_rank` columns added
+    to the same rows, so no join either.
+
+    The edge input is counted once (or its stamped count is used).
+    The count lets pagerank's small_state_scope size the loop, and
+    twice the count bounds the node count that sizes the ranker: a
+    graph of up to SPARK_GRAFT_LOOP_ROWS_PER_PART/2 edges is ranked
+    by one window per order, with no driver collect.
     """
     from commoncrawl_crawler_spark.operators import graph as g
 
-    from commoncrawl_crawler_spark.loopscope import known_rows, stamp_rows
-
-    # re-stamp the row count through the projection so the pagerank
-    # loop can size its shuffles (r10-opt; see loopscope)
+    n_edges = known_rows(host_edges)
+    if n_edges is None:
+        n_edges = host_edges.count()
     edges = stamp_rows(
         host_edges.select(
             F.col("src_host_rev").alias("src"),
             F.col("dst_host_rev").alias("dst"),
         ),
-        known_rows(host_edges),
+        n_edges,
     )
-    pr = g.pagerank(edges, iterations=iterations).select(
-        F.col("node").alias("host_rev"),
-        F.col("rank").alias("pagerank"),
+    max_nodes = 2 * n_edges  # every node is an endpoint of some edge
+    pr = g.pagerank_fixed_point(edges, iterations=iterations).select(
+        F.col("node").alias("host_rev"), "rank_i"
     )
-    ids = dense_node_ids(host_edges, "src_host_rev", "dst_host_rev")
-    # referenced twice (ordinal key build + final join): boundary so
-    # the pagerank-output join is planned and executed once (r9-opt
-    # wave 6, the multiply-referenced-subplan discipline)
-    from commoncrawl_crawler_spark.checkpointing import ckpt_lazy
-
-    scored = pr.join(
-        ids.withColumnRenamed("name", "host_rev"), "host_rev"
-    ).transform(ckpt_lazy)
+    ided = with_key_rank(pr, "host_rev", "node_id", max_nodes)
     # monotone encoding: bigger score -> lexicographically smaller
-    # key; floor(x*1e6+0.5) recovers the fixed-point integer exactly
-    # (bare cast of a double product can land one ulp low). 10^18
-    # headroom: max rank_i is O(n_nodes * 1e6), so the complement
-    # stays positive (and the lpad monotone) up to ~10^12 nodes
+    # key. 10^18 headroom: max rank_i is O(n_nodes * 1e6), so the
+    # complement stays positive (and the lpad monotone) up to ~10^12
+    # nodes
     key = F.concat(
-        F.lpad(
-            (
-                F.lit(10**18)
-                - F.floor(F.col("pagerank") * 1000000 + F.lit(0.5))
-            ).cast("string"),
-            19,
-            "0",
-        ),
+        F.lpad((F.lit(10**18) - F.col("rank_i")).cast("string"), 19, "0"),
         F.lit("|"),
         F.col("host_rev"),
     )
-    ordinals = dense_rank_by_key(
-        scored.select(key.alias("name")).distinct()
-    ).withColumnRenamed("node_id", "rank_ordinal")
-    return (
-        scored.withColumn("_k", key)
-        .join(ordinals, F.col("_k") == ordinals["name"])
-        .select("rank_ordinal", "node_id", "host_rev", "pagerank")
+    return with_key_rank(
+        ided.withColumn("_k", key), "_k", "rank_ordinal", max_nodes
+    ).select(
+        "rank_ordinal",
+        "node_id",
+        "host_rev",
+        F.round(F.col("rank_i") / g.RANK_SCALE, 6).alias("pagerank"),
     )

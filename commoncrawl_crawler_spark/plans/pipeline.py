@@ -123,17 +123,24 @@ class PipelineTask:
         """Run incomplete steps in dependency order; return all step
         outputs (read back from parquet, so lineage is truncated at
         step boundaries exactly like the reference's HDFS handoffs).
-        Returns the executed step names in `self.last_executed`."""
+        Returns the executed step names in `self.last_executed`.
+
+        A step written in this run is read back with the schema of the
+        DataFrame that wrote it, which is what parquet schema inference
+        would return (all fields nullable), so the read-back runs no
+        inference job. A skipped step's schema is inferred."""
         outputs: dict[str, DataFrame] = {}
         executed: list[str] = []
         for step in self._toposort():
             path = self._out(step.name)
+            reader = spark.read
             if not self.is_complete(step.name, spark):
                 dep_outputs = {d: outputs[d] for d in step.deps}
                 df = step.build(spark, dep_outputs)
                 df.write.mode("overwrite").parquet(path)
                 executed.append(step.name)
-            outputs[step.name] = spark.read.parquet(path)
+                reader = reader.schema(df.schema)
+            outputs[step.name] = reader.parquet(path)
         self.last_executed = executed
         return outputs
 

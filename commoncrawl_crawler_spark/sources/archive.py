@@ -54,7 +54,6 @@ from pyspark.sql.types import (
 )
 
 from ..operators.parseguard import guard
-from ..checkpointing import ckpt_eager, ckpt_lazy, stable_checkpoint
 MAGIC = b"ccarc/1"
 DEFAULT_ROTATE_BYTES = 64 * 1024 * 1024  # size rotation like ArcFileWriter
 _WS_RE = re.compile(r"\s")
@@ -1020,12 +1019,15 @@ def write_cdx(idx: DataFrame, path: str, shards: int = 4) -> None:
     shard however many captures exist.
 
     Spark shape: repartitionByRange(urlkey, timestamp) IS the global
-    sort's exchange -- it establishes the cross-shard order; the
-    within-shard sort runs pandas-side in the writer task (groupBy's
-    applyInPandas does not guarantee arrival order, so the task sort
-    is the authoritative one). Each task streams its shard to disk
-    and returns the shard's first key -- the cluster.idx summary
-    costs no extra scan."""
+    sort's exchange -- it establishes the cross-shard order -- and the
+    only exchange. A mapInPandas over its output writes one shard per
+    partition: the task sorts its rows (the exchange does not order
+    within a partition; the line breaks ties, so equal keys land in a
+    fixed order), streams them to disk and yields the shard's first
+    key, so the cluster.idx summary costs no extra scan. An empty
+    partition writes no file and no cluster.idx line. The range
+    bounds are sampled, so where the shards split can vary between
+    runs; the concatenated shard lines cannot."""
     os.makedirs(path, exist_ok=True)
     line = F.concat_ws(
         " ",
@@ -1037,21 +1039,16 @@ def write_cdx(idx: DataFrame, path: str, shards: int = 4) -> None:
             )
         ),
     )
-    ranged = (
-        idx.repartitionByRange(shards, "urlkey", "timestamp")
-        .select(
-            F.spark_partition_id().alias("pid"), line.alias("line"),
-            "urlkey", "timestamp",
-        )
-        .transform(ckpt_eager)  # one exchange feeds both writes
+    ranged = idx.repartitionByRange(shards, "urlkey", "timestamp").select(
+        F.spark_partition_id().alias("pid"), line.alias("line"),
+        "urlkey", "timestamp",
     )
 
-    def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"pid": [], "first_key": [], "file": []})
-        # groupBy().applyInPandas does not guarantee within-group row
-        # order survives the exchange -- sort authoritatively here
-        pdf = pdf.sort_values(["urlkey", "timestamp"])
+    def _write_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return  # empty partition: no shard file, no cluster.idx line
+        pdf = pd.concat(frames).sort_values(["urlkey", "timestamp", "line"])
         pid = int(pdf["pid"].iloc[0])
         fname = f"cdx-{pid:05d}.txt"
         tmp = os.path.join(path, f".{fname}.tmp")
@@ -1059,7 +1056,7 @@ def write_cdx(idx: DataFrame, path: str, shards: int = 4) -> None:
             fh.write("\n".join(pdf["line"]) + "\n")
         os.replace(tmp, os.path.join(path, fname))
         first = pdf.iloc[0]
-        return pd.DataFrame(
+        yield pd.DataFrame(
             {
                 "pid": [pid],
                 "first_key": [f"{first['urlkey']} {first['timestamp']}"],
@@ -1067,11 +1064,11 @@ def write_cdx(idx: DataFrame, path: str, shards: int = 4) -> None:
             }
         )
 
-    summary = (
-        ranged.groupBy("pid")
-        .applyInPandas(_write_shard, "pid int, first_key string, file string")
-        .orderBy("pid")
-        .collect()  # bounded: one row per shard
+    summary = sorted(
+        ranged.mapInPandas(
+            _write_shard, "pid int, first_key string, file string"
+        ).collect(),  # bounded: one row per non-empty shard
+        key=lambda r: r["pid"],
     )
     with open(os.path.join(path, "cluster.idx"), "w", encoding="utf-8") as fh:
         for r in summary:

@@ -29,3 +29,24 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(action) -> how many Spark jobs `action()` ran, counted
+    through a job group and the public statusTracker()."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(action) -> int:
+        # a fresh group per call: the tracker keeps every finished job
+        group = f"ccspark-count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

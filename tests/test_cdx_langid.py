@@ -362,3 +362,52 @@ def test_read_warc_ranges_matches_full_scan_and_rejects_stale_plans(
     )
     with pytest.raises(Exception, match="stale fetch plan"):
         archive.read_warc_ranges(spark, bad, str(tmp_path)).collect()
+
+
+def _shard_lines(path):
+    out = []
+    for ln in open(path / "cluster.idx").read().splitlines():
+        out.extend(open(path / ln.split("\t")[1]).read().splitlines())
+    return out
+
+
+def test_write_cdx_shards_in_order_equal_cdx_index_order(spark, tmp_path):
+    rows = [
+        (
+            "response",
+            f"<urn:uuid:{i}>",
+            f"http://h{(i * 7) % 13}.example.com/doc/{i % 5}",
+            f"2024-02-{i % 3 + 1:02d}T00:00:{i:02d}Z",
+            "text/html",
+            f"payload-{i}".encode(),
+        )
+        for i in range(30)
+    ]
+    idx = archive.cdx_index(_write_warc(spark, tmp_path / "warc", rows))
+    archive.write_cdx(idx, str(tmp_path / "cdx"), shards=3)
+    want = [
+        f"{r['urlkey']} {r['timestamp']} {r['meta']}"
+        for r in idx.select(
+            "urlkey", "timestamp",
+            F.to_json(
+                F.struct(
+                    "original", "mime", "digest", "length", "offset",
+                    "filename",
+                )
+            ).alias("meta"),
+        ).collect()
+    ]
+    assert _shard_lines(tmp_path / "cdx") == want
+
+
+def test_write_cdx_more_shards_than_rows_writes_no_empty_shard(
+    spark, tmp_path
+):
+    archive.write_cdx(_demo_index(spark, n=3), str(tmp_path), shards=8)
+    idx_lines = open(tmp_path / "cluster.idx").read().splitlines()
+    files = sorted(p.name for p in tmp_path.glob("cdx-*.txt"))
+    # every written shard holds a line and has one cluster.idx entry
+    assert sorted(ln.split("\t")[1] for ln in idx_lines) == files
+    assert all(open(tmp_path / f).read().strip() for f in files)
+    assert len(_shard_lines(tmp_path)) == 3
+    assert not list(tmp_path.glob(".*.tmp"))

@@ -249,3 +249,31 @@ def test_pipeline_completion_check_works_on_non_os_path_uri(
     assert again.last_executed == []  # skipped: completion seen via URI
     assert len(calls) == 1
     assert out["regions"].count() == 5
+
+
+def test_step_read_back_keeps_written_schema_without_a_job(
+    spark, tmp_path, count_jobs
+):
+    def build(s, deps):
+        return s.range(3).select(
+            "id",
+            F.struct("id", F.lit("x").alias("tag")).alias("s"),
+            F.array("id", F.lit(None).cast("long")).alias("arr"),
+            F.create_map(F.lit("k"), "id").alias("m"),
+            F.timestamp_seconds("id").alias("ts"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz").alias("ntz"),
+            F.lit(b"\x00\x01").alias("bin"),
+        )
+
+    task = PipelineTask(str(tmp_path / "w")).add(PipelineStep("t", build))
+    outs = {}
+    run_jobs = count_jobs(lambda: outs.update(task.run(spark)))
+    write_jobs = count_jobs(
+        lambda: build(spark, {}).write.parquet(str(tmp_path / "plain"))
+    )
+    assert run_jobs == write_jobs  # the read-back ran no job
+    inferred = spark.read.parquet(str(tmp_path / "w" / "t"))
+    assert outs["t"].schema == inferred.schema
+    assert sorted(map(str, outs["t"].collect())) == sorted(
+        map(str, inferred.collect())
+    )

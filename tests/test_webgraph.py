@@ -196,3 +196,57 @@ def test_root_domain_expr_seeded_differential(spark):
     ]
     want = [urls.root_domain(h) for h in hosts]
     assert got == want
+
+
+def _graph_links(spark, n_hosts=60, n_links=600):
+    import random
+
+    rng = random.Random(11)
+    hosts = [f"h{i}.site{i % 9}.com" for i in range(n_hosts)]
+    return spark.createDataFrame(
+        [(rng.choice(hosts), rng.choice(hosts)) for _ in range(n_links)],
+        "src_host string, dst_host string",
+    )
+
+
+def test_dense_rank_by_key_one_bucket_equals_bucketed(spark, monkeypatch):
+    names = spark.createDataFrame(
+        [(f"n{(i * 7919) % 500:04d}",) for i in range(500)], "name string"
+    )
+    one = sorted(map(tuple, webgraph.dense_rank_by_key(names).collect()))
+    # one key per bucket budget: the sample/cut/offset path runs
+    monkeypatch.setenv("SPARK_GRAFT_LOOP_ROWS_PER_PART", "1")
+    bucketed = sorted(
+        map(tuple, webgraph.dense_rank_by_key(names, buckets=7).collect())
+    )
+    assert one == bucketed
+    assert [r[1] for r in one] == list(range(500))
+
+
+def test_ranks_matches_oracle_gate_on_both_ranker_paths(
+    spark, sf_correct, monkeypatch
+):
+    import __spark_entry__ as entrymod
+
+    from .oracle_harness import compare_query
+
+    query = entrymod.queries()["graph_webgraph_ranks"]
+    sql = entrymod.oracle_sql()["graph_webgraph_ranks"]
+    for rows_per_part in (None, "3"):
+        if rows_per_part:
+            monkeypatch.setenv("SPARK_GRAFT_LOOP_ROWS_PER_PART", rows_per_part)
+        res = compare_query(spark, sf_correct, query, sql)
+        assert res["values_match"], (rows_per_part, res)
+
+
+def test_ranks_job_count_on_small_graph(spark, tmp_path, count_jobs):
+    # the host graph as a pipeline step hands it over: read back from
+    # parquet, no stamped row count
+    path = str(tmp_path / "host_edges")
+    webgraph.host_graph(_graph_links(spark)).write.parquet(path)
+    out = str(tmp_path / "ranks")
+    jobs = count_jobs(
+        lambda: webgraph.ranks(spark.read.parquet(path)).write.parquet(out),
+    )
+    assert jobs <= 12, jobs
+    assert spark.read.parquet(out).count() == 60
