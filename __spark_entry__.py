@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from commoncrawl_crawler_spark.operators import (
-    aacdecode,
     aggregates,
     bpe,
     analytics,
@@ -36,10 +35,7 @@ from commoncrawl_crawler_spark.operators import (
     corpus,
     layout,
     mediameta,
-    mp3layer3,
-    mpegsynth,
     multimodal,
-    pdfdoc,
     videobits,
     robots,
     sampling,
@@ -94,9 +90,8 @@ def _share_sort(df: DataFrame) -> DataFrame:
     -- for the media/document gates, the entire Arrow synth+decode
     chain -- is recomputed in full (guide 1.4/2.4). The lazy
     localCheckpoint materializes the narrow feature rows on the
-    sampling pass and the sort reads them back (r9-opt wave 2:
-    mm_aac_decode 3.99 s -> 2.26 s noop at sf0.1 local[32]; applied
-    to every gate whose top-level Sort sits above a Python chain).
+    sampling pass and the sort reads them back (applied to every
+    gate whose top-level Sort sits above a Python chain).
     Routed through stable_checkpoint, so a cluster run with
     SPARK_GRAFT_CHECKPOINT_DIR set gets executor-loss-safe reliable
     checkpoints of these (small, per-media summary) tables."""
@@ -4455,20 +4450,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             container.synthesize_exif_jpeg(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
         # REAL MPEG-1 Layer I subband decode (ISO 11172-3 2.4.3.3):
-        # bit allocation, scalefactors, mid-tread dequantization --
-        # the synthesis window (spec table C.1) is the only
-        # remaining external piece of the MPEG audio stack
+        # bit allocation, scalefactors, mid-tread dequantization
+        # (the polyphase synthesis to PCM is not implemented)
         "mm_mp3_layer1_decode": lambda s, d: container.decode_layer1(
-            container.synthesize_layer1(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # Layer I decode carried through the REAL ISO polyphase
-        # synthesis structure (operators/mpegsynth.py): subband micro
-        # ints -> Q14 windowed MAC -> exact integer PCM accounting.
-        # The in-repo NPR window stands in for spec table C.1 (not
-        # reproducible from closed form); the structure, matrixing,
-        # and fixed-point discipline are spec-exact and the window is
-        # pluggable.
-        "mm_mp1_synthesis": lambda s, d: mpegsynth.layer1_pcm_stats(
             container.synthesize_layer1(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
         # REAL MPEG-1 Layer II decode (ISO 11172-3 2.4.3.3.2, table
@@ -4476,15 +4460,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # base-n degrouping, exact rational requantization
         "mm_mp2_decode": lambda s, d: container.decode_layer2(
             container.synthesize_layer2(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-8: FULL Layer III decode to PCM -- scalefactors
-        # (slen/scfsi sharing), count1 Huffman (table A verified as a
-        # complete prefix code; big-value tables are a documented
-        # boundary), exact power-of-two requantization, Q14 alias
-        # butterflies, fused Q14 IMDCT-36/sine-window, overlap-add,
-        # frequency inversion, Q28 polyphase -- all int64-exact
-        "mm_mp3_decode": lambda s, d: mp3layer3.layer3_pcm_stats(
-            mp3layer3.synthesize_layer3(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
         # AAC/ADTS transport walk (ISO 14496-3 1.A.2.2): real frame
         # headers, published sampling-frequency table, exact sample
@@ -4497,19 +4472,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # first audio element id) + derived AudioSpecificConfig.
         "mm_aac_elements": lambda s, d: videobits.aac_element_stats(
             videobits.synthesize_aac_elements(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-9: full AAC-LC SCE decode -- 13818-7 syntax walk
-        # (sections, scalefactor DPCM, quad/pair spectral tuples,
-        # sign bits, book-11 escapes) + 4/3-power dequantizer.  The
-        # huffman CODEWORD patterns are engine-canonical over the
-        # spec alphabets (aacdecode.py module docstring: the spec's
-        # empirically-designed tables are not transcribable with
-        # confidence here), so external AAC stays behind the
-        # element-census boundary; everything else in the chain is
-        # spec grammar, and the dequantized spectra are integer-exact
-        # by construction for the oracle
-        "mm_aac_decode": lambda s, d: aacdecode.aac_lc_decode_stats(
-            aacdecode.synthesize_aac_lc(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
         # H.264 Annex-B NAL walk + REAL SPS decode (Exp-Golomb,
         # emulation-prevention unescape, cropping arithmetic): the
@@ -4564,40 +4526,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # shards by, without macroblock decode
         "mm_h264_slices": lambda s, d: videobits.h264_slice_stats(
             videobits.synthesize_h264_slices(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # PDF syntax walk (ISO 32000): object census, page-tree count,
-        # BT/ET text extraction incl. FlateDecode streams -- the
-        # document-routing profile for the web's largest non-HTML class
-        "doc_pdf_profile": lambda s, d: pdfdoc.pdf_profile(
-            pdfdoc.synthesize_pdf(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # the same logical documents serialized the post-2006 way:
-        # /Type /XRef cross-reference streams (7.5.8, /W widths + PNG
-        # Up predictor) with catalog/page-tree nodes packed into a
-        # Flate /ObjStm (7.5.7) -- profile must match the classic
-        # build except the version tag
-        "doc_pdf_xrefstream": lambda s, d: pdfdoc.pdf_profile(
-            pdfdoc.synthesize_pdf_xrefstream(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-8: owner-locked PDFs (standard security handler
-        # 7.6.3, RC4 /V 1-2, EMPTY user password -- the form crawls
-        # actually see): authenticate via /U, per-object keys,
-        # streams decrypted before filters. AES (/V 4+) raises named
-        "doc_pdf_encrypted": lambda s, d: pdfdoc.pdf_profile(
-            pdfdoc.synthesize_pdf_encrypted(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # OpenType/TrueType sfnt table directory + head/name decode:
-        # the web-font routing profile (flavor, unitsPerEm, family)
-        "doc_font_profile": lambda s, d: pdfdoc.font_profile(
-            pdfdoc.synthesize_fonts(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-8: the same fonts WOFF-1.0-wrapped (the form web
-        # crawls actually see): 44-byte header, 20-byte directory,
-        # per-table zlib (both stored and deflated exercised), logical
-        # sfnt rebuilt so head/name decode is literally shared.
-        # WOFF2 = Brotli = documented NotImplementedError
-        "doc_woff_profile": lambda s, d: pdfdoc.woff_profile(
-            pdfdoc.synthesize_woff(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
         # consistent-hash ring (Karger 1997): the elastic upgrade of
         # the reference's modulo host-sharding; ring broadcast, one
@@ -5285,198 +5213,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return wrapped
 
     return {k: _named(k, v) for k, v in ordered.items()}
-
-
-# ---------------------------------------------------------------
-# mm_mp3_decode oracle: the Layer III integer pipeline re-expressed
-# as DuckDB SQL.  The Q14/Q28 table literals are formatted from the
-# SAME module constants the Spark kernels use (they are fixed-point
-# spec constants, shared the way ISO tables are); the pipeline
-# STRUCTURE -- closed-form spectra, alias butterflies, IMDCT sum,
-# overlap-add, inversion, polyphase -- is written independently in
-# SQL below, so any structural mistake on either side hash-fails.
-# ---------------------------------------------------------------
-
-
-def _fd(expr: str, m: int) -> str:
-    """SQL floor division (matches Python // and int64 >> on
-    negatives, unlike a truncating integer divide)."""
-    return (
-        f"CAST(({expr} - ((({expr}) % {m}) + {m}) % {m}) // {m} "
-        "AS BIGINT)"
-    )
-
-
-def _l3_oracle_sql() -> str:
-    import numpy as _np
-
-    csq = ",".join(str(x) for x in mp3layer3.CS_Q14)
-    caq = ",".join(str(x) for x in mp3layer3.CA_Q14)
-    wq = ",".join(str(x) for x in mp3layer3.IMDCT_WIN_Q14.reshape(-1))
-    bounds = ",".join(str(x) for x in mp3layer3.SFB_LONG_44100)
-    pretab = ",".join(str(x) for x in mp3layer3.PRETAB)
-    dq = ",".join(str(x) for x in mpegsynth.SYNTH_WINDOW_Q14)
-    nq = ",".join(str(x) for x in mpegsynth.SYNTH_COS_Q14)
-    fd14_z = _fd("acc", 1 << 14)
-    fd14_a = _fd("csq[m.i+1]*a - caq[m.i+1]*bb", 1 << 14)
-    fd14_b = _fd("csq[m.i+1]*bb + caq[m.i+1]*a", 1 << 14)
-    fd28 = _fd("a", 1 << 28)
-    return f"""
-        WITH t3 AS (
-            SELECT [{csq}] AS csq, [{caq}] AS caq, [{wq}] AS wq,
-                   [{bounds}] AS bounds, [{pretab}] AS pretab,
-                   [{dq}] AS dq, [{nq}] AS nq
-        ), quads AS (
-            -- _l3_granule_spec closed forms: 2 granules, 8..19
-            -- quadruples of |is|<=1 values at lines 2*n_bigs + 4q+j
-            -- (offset past the big-value region, n_bigs = 4+(mid+g)%6)
-            SELECT doc_id, g.g,
-                   2*(4 + (doc_id + g.g) % 6) + 4*q.q + j.j AS line,
-                   CAST(1 AS BIGINT) AS mag43,
-                   CASE WHEN (doc_id + q.q + j.j) % 2 = 1
-                        THEN -1 ELSE 1 END AS sgn
-            FROM documents,
-                 (SELECT unnest(range(0, 2)) AS g) g,
-                 (SELECT unnest(range(0, 20)) AS q) q,
-                 (SELECT unnest(range(0, 4)) AS j) j
-            WHERE q.q < 8 + (doc_id + 3*g.g) % 12
-              AND (doc_id + 3*g.g + 5*q.q + 7*j.j) % 2 = 1
-        ), bigl AS (
-            -- big-value pairs: cube magnitudes {0,1,8,27} whose 4/3
-            -- powers are exactly {0,1,16,81}; x at even line (idx
-            -- (mid+2g+p)%4, sign (mid+g+p)%2), y at odd line (idx
-            -- (mid+g+3p)%4, sign (mid+p)%2); 27 only in region0
-            -- (pairs p<4, ESC table 24)
-            SELECT doc_id, g.g, 2*p.p + e.e AS line,
-                   CAST(CASE CASE WHEN e.e = 0
-                             THEN (doc_id + 2*g.g + p.p) % 4
-                             ELSE (doc_id + g.g + 3*p.p) % 4 END
-                        WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 16
-                        ELSE CASE WHEN p.p < 4 THEN 81 ELSE 1 END
-                        END AS BIGINT) AS mag43,
-                   CASE WHEN (CASE WHEN e.e = 0
-                              THEN (doc_id + g.g + p.p) % 2
-                              ELSE (doc_id + p.p) % 2 END) = 1
-                        THEN -1 ELSE 1 END AS sgn
-            FROM documents,
-                 (SELECT unnest(range(0, 2)) AS g) g,
-                 (SELECT unnest(range(0, 9)) AS p) p,
-                 (SELECT unnest(range(0, 2)) AS e) e
-            WHERE p.p < 4 + (doc_id + g.g) % 6
-        ), slines AS (
-            SELECT * FROM quads UNION ALL
-            SELECT * FROM bigl WHERE mag43 <> 0
-        ), bands AS (
-            SELECT b.i AS sfb, bounds[b.i+1] AS lo, bounds[b.i+2] AS hi
-            FROM t3, (SELECT unnest(range(0, 22)) AS i) b
-        ), vals AS (
-            SELECT q.doc_id, q.g, q.line,
-                   CAST(floor(q.sgn * q.mag43 * pow(2.0, CAST((
-                       ((210 - 4*(8 + (q.doc_id + q.g) % 4)) - 210)
-                           // 2
-                       - (((q.doc_id + q.g) % 2) + 1)
-                         * (CASE WHEN q.g = 1
-                                  AND (q.doc_id % 16) //
-                                      (CASE WHEN b.sfb < 6 THEN 8
-                                            WHEN b.sfb < 11 THEN 4
-                                            WHEN b.sfb < 16 THEN 2
-                                            ELSE 1 END) % 2 = 1
-                             THEN 2*((q.doc_id + 0 + b.sfb) % 4)
-                             ELSE 2*((q.doc_id + q.g + b.sfb) % 4)
-                            END
-                            + CASE WHEN ((q.doc_id + q.g) % 2)
-                                      * ((q.doc_id // 2 + q.g) % 2)
-                                      = 1
-                                   THEN pretab[b.sfb + 1]
-                                   ELSE 0 END)
-                   ) // 2 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-                       AS x_micro
-            FROM slines q
-            JOIN bands b ON q.line >= b.lo AND q.line < b.hi
-            CROSS JOIN t3
-        ), butter AS (
-            SELECT d.doc_id, g.g, i.i,
-                   18*b.b - 1 - i.i AS lo_pos, 18*b.b + i.i AS hi_pos
-            FROM documents d,
-                 (SELECT unnest(range(0, 2)) AS g) g,
-                 (SELECT unnest(range(1, 6)) AS b) b,
-                 (SELECT unnest(range(0, 8)) AS i) i
-        ), mixed AS (
-            SELECT bt.doc_id, bt.g, bt.i, bt.lo_pos, bt.hi_pos,
-                   COALESCE(vlo.x_micro, 0) AS a,
-                   COALESCE(vhi.x_micro, 0) AS bb
-            FROM butter bt
-            LEFT JOIN vals vlo ON vlo.doc_id = bt.doc_id
-                 AND vlo.g = bt.g AND vlo.line = bt.lo_pos
-            LEFT JOIN vals vhi ON vhi.doc_id = bt.doc_id
-                 AND vhi.g = bt.g AND vhi.line = bt.hi_pos
-        ), spectral AS (
-            SELECT m.doc_id, m.g, m.lo_pos AS line,
-                   {fd14_a} AS x
-            FROM mixed m CROSS JOIN t3
-            UNION ALL
-            SELECT m.doc_id, m.g, m.hi_pos AS line,
-                   {fd14_b} AS x
-            FROM mixed m CROSS JOIN t3
-            UNION ALL
-            -- positions no butterfly touches (<=9 or mod-18 in 8,9)
-            SELECT doc_id, g, line, x_micro AS x FROM vals
-            WHERE line <= 9 OR line % 18 IN (8, 9)
-        ), zacc AS (
-            SELECT s.doc_id, s.g, s.line // 18 AS sb, n.n,
-                   SUM(s.x * wq[n.n * 18 + (s.line % 18) + 1]) AS acc
-            FROM spectral s CROSS JOIN t3,
-                 (SELECT unnest(range(0, 36)) AS n) n
-            WHERE s.x <> 0
-            GROUP BY s.doc_id, s.g, s.line // 18, n.n
-        ), z AS (
-            SELECT doc_id, g, sb, n, {fd14_z} AS z FROM zacc
-        ), sgrid AS (
-            SELECT doc_id, g, sb, n,
-                   SUM(z) * (CASE WHEN sb % 2 = 1 AND n % 2 = 1
-                                  THEN -1 ELSE 1 END) AS s
-            FROM (
-                SELECT doc_id, g, sb, n, z FROM z WHERE n < 18
-                UNION ALL
-                SELECT doc_id, g + 1 AS g, sb, n - 18 AS n, z
-                FROM z WHERE n >= 18 AND g + 1 < 2
-            )
-            GROUP BY doc_id, g, sb, n
-        ), coef AS (
-            SELECT m.m, j.j, k.k,
-                   CAST(CASE WHEN m.m % 2 = 0
-                        THEN dq[(m.m // 2) * 64 + j.j + 1]
-                             * nq[j.j * 32 + k.k + 1]
-                        ELSE dq[(m.m // 2) * 64 + 32 + j.j + 1]
-                             * nq[(32 + j.j) * 32 + k.k + 1]
-                        END AS BIGINT) AS c
-            FROM t3,
-                 (SELECT unnest(range(0, 16)) AS m) m,
-                 (SELECT unnest(range(0, 32)) AS j) j,
-                 (SELECT unnest(range(0, 32)) AS k) k
-        ), acc36 AS (
-            SELECT s.doc_id, s.g * 18 + s.n + c.m AS og, c.j,
-                   CAST(SUM(c.c * s.s) AS BIGINT) AS a
-            FROM sgrid s JOIN coef c ON c.k = s.sb
-            WHERE s.s <> 0 AND s.g * 18 + s.n + c.m < 36
-            GROUP BY s.doc_id, s.g * 18 + s.n + c.m, c.j
-        ), pcm AS (
-            SELECT doc_id, {fd28} AS x FROM acc36
-        )
-        SELECT d.doc_id AS media_id, CAST(1 AS INT) AS n_frames,
-               CAST(1152 AS BIGINT) AS n_pcm,
-               CAST(COALESCE(SUM(p.x), 0) AS BIGINT)
-                   AS pcm_sum_micro,
-               CAST(COALESCE(SUM(abs(p.x)), 0) AS BIGINT)
-                   AS pcm_sum_abs_micro,
-               CAST(COALESCE(MAX(abs(p.x)), 0) AS BIGINT)
-                   AS pcm_peak_micro
-        FROM documents d LEFT JOIN pcm p ON p.doc_id = d.doc_id
-        GROUP BY d.doc_id ORDER BY media_id
-    """
-
-
-_MM_MP3_DECODE_SQL = _l3_oracle_sql()
 
 
 _CCINDEX_SQL = """
@@ -7683,223 +7419,10 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS decoded_sum
             FROM documents ORDER BY doc_id
         """,
-        # Layer I synth params are closed-form per (frame f, subband
-        # sb, granule g): i in [0,768) decomposes as f=i//384,
-        # sb=(i//12)%32, g=i%12; coded iff (sb+id+f)%4==0 with
-        # nb=3+(sb+id)%3 bits, code=(id*7+f*11+sb*5+g*3)%2^nb,
-        # scalefactor 2*2^-((sb+f)%3); the dequantization expression
-        # mirrors the decoder op-for-op (IEEE-exact, micro-quantized
-        # per sample before the order-independent bigint sum)
-        # Layer I PCM via the unrolled ISO synthesis dataflow: the
-        # Q14 window/matrixing literals (generated constants, same as
-        # operators/mpegsynth.py), the coded-subband closed form of
-        # _layer1_params, and floor-division by 2^28 written as
-        # (s - posmod)/d to match Python's // on negatives
-        "mm_mp1_synthesis": """
-            WITH tabs AS (
-                SELECT [24,28,31,34,37,40,42,43,44,44,43,42,40,36,32,26,20,12,
-                3,-7,-18,-30,-44,-59,-75,-91,-109,-128,-148,-169,-190,-212,-234,-256,-279,-301,
-                -323,-345,-367,-387,-407,-426,-443,-459,-473,-486,-496,-504,-510,-514,-515,-513,-508,-501,
-                -490,-477,-461,-441,-419,-393,-365,-333,-299,-263,224,182,139,94,47,-1,-50,-100,
-                -151,-201,-252,-301,-350,-398,-444,-488,-530,-569,-605,-637,-667,-692,-713,-730,-742,-749,
-                -751,-749,-741,-728,-710,-686,-657,-624,-585,-542,-495,-443,-387,-328,-266,-201,-134,-64,
-                6,77,149,220,290,359,426,490,551,608,661,710,752,790,820,845,862,872,
-                874,869,-856,-835,-806,-768,-723,-670,-610,-543,-468,-388,-301,-209,-113,-12,91,198,
-                305,414,522,630,735,837,936,1029,1116,1197,1269,1333,1387,1431,1464,1484,1493,1488,
-                1469,1436,1390,1329,1253,1163,1059,941,810,665,508,340,162,-26,-222,-425,-634,-846,
-                -1060,-1275,-1489,-1699,-1904,-2101,-2288,-2463,-2624,-2769,-2895,-3000,3082,3137,3166,3164,3130,3062,
-                2958,2816,2635,2413,2148,1840,1486,1088,643,151,-388,-975,-1608,-2288,-3015,-3786,-4602,-5462,
-                -6362,-7303,-8282,-9296,-10344,-11422,-12529,-13661,-14815,-15987,-17175,-18375,-19582,-20794,-22007,-23215,-24417,-25606,
-                -26780,-27935,-29065,-30168,-31240,-32276,-33273,-34227,-35134,-35992,-36797,-37546,-38237,-38866,-39431,-39931,-40363,-40725,
-                -41017,-41237,-41383,-41457,41457,41383,41237,41017,40725,40363,39931,39431,38866,38237,37546,36797,35992,35134,
-                34227,33273,32276,31240,30168,29065,27935,26780,25606,24417,23215,22007,20794,19582,18375,17175,15987,14815,
-                13661,12529,11422,10344,9296,8282,7303,6362,5462,4602,3786,3015,2288,1608,975,388,-151,-643,
-                -1088,-1486,-1840,-2148,-2413,-2635,-2816,-2958,-3062,-3130,-3164,-3166,-3137,-3082,3000,2895,2769,2624,
-                2463,2288,2101,1904,1699,1489,1275,1060,846,634,425,222,26,-162,-340,-508,-665,-810,
-                -941,-1059,-1163,-1253,-1329,-1390,-1436,-1469,-1488,-1493,-1484,-1464,-1431,-1387,-1333,-1269,-1197,-1116,
-                -1029,-936,-837,-735,-630,-522,-414,-305,-198,-91,12,113,209,301,388,468,543,610,
-                670,723,768,806,835,856,-869,-874,-872,-862,-845,-820,-790,-752,-710,-661,-608,-551,
-                -490,-426,-359,-290,-220,-149,-77,-6,64,134,201,266,328,387,443,495,542,585,
-                624,657,686,710,728,741,749,751,749,742,730,713,692,667,637,605,569,530,
-                488,444,398,350,301,252,201,151,100,50,1,-47,-94,-139,-182,-224,263,299,
-                333,365,393,419,441,461,477,490,501,508,513,515,514,510,504,496,486,473,
-                459,443,426,407,387,367,345,323,301,279,256,234,212,190,169,148,128,109,
-                91,75,59,44,30,18,7,-3,-12,-20,-26,-32,-36,-40,-42,-43,-44,-44,
-                -43,-42,-40,-37,-34,-31,-28,-24] AS dq,
-                       [11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,
-                -11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11003,-13160,-8423,14811,
-                5520,-15893,-2404,16364,-804,-16207,3981,15426,-7005,-14053,9760,12140,-12140,-9760,14053,7005,-15426,-3981,
-                16207,804,-16364,2404,15893,-5520,-14811,8423,13160,-11003,10394,-14449,-4756,16305,-1606,-15679,7723,12665,
-                -12665,-7723,15679,1606,-16305,4756,14449,-10394,-10394,14449,4756,-16305,1606,15679,-7723,-12665,12665,7723,
-                -15679,-1606,16305,-4756,-14449,10394,9760,-15426,-804,15893,-8423,-11003,14811,2404,-16207,7005,12140,-14053,
-                -3981,16364,-5520,-13160,13160,5520,-16364,3981,14053,-12140,-7005,16207,-2404,-14811,11003,8423,-15893,804,
-                15426,-9760,9102,-16069,3196,13623,-13623,-3196,16069,-9102,-9102,16069,-3196,-13623,13623,3196,-16069,9102,
-                9102,-16069,3196,13623,-13623,-3196,16069,-9102,-9102,16069,-3196,-13623,13623,3196,-16069,9102,8423,-16364,
-                7005,9760,-16207,5520,11003,-15893,3981,12140,-15426,2404,13160,-14811,804,14053,-14053,-804,14811,-13160,
-                -2404,15426,-12140,-3981,15893,-11003,-5520,16207,-9760,-7005,16364,-8423,7723,-16305,10394,4756,-15679,12665,
-                1606,-14449,14449,-1606,-12665,15679,-4756,-10394,16305,-7723,-7723,16305,-10394,-4756,15679,-12665,-1606,14449,
-                -14449,1606,12665,-15679,4756,10394,-16305,7723,7005,-15893,13160,-804,-12140,16207,-8423,-5520,15426,-14053,
-                2404,11003,-16364,9760,3981,-14811,14811,-3981,-9760,16364,-11003,-2404,14053,-15426,5520,8423,-16207,12140,
-                804,-13160,15893,-7005,6270,-15137,15137,-6270,-6270,15137,-15137,6270,6270,-15137,15137,-6270,-6270,15137,
-                -15137,6270,6270,-15137,15137,-6270,-6270,15137,-15137,6270,6270,-15137,15137,-6270,-6270,15137,-15137,6270,
-                5520,-14053,16207,-11003,804,9760,-15893,14811,-7005,-3981,13160,-16364,12140,-2404,-8423,15426,-15426,8423,
-                2404,-12140,16364,-13160,3981,7005,-14811,15893,-9760,-804,11003,-16207,14053,-5520,4756,-12665,16305,-14449,
-                7723,1606,-10394,15679,-15679,10394,-1606,-7723,14449,-16305,12665,-4756,-4756,12665,-16305,14449,-7723,-1606,
-                10394,-15679,15679,-10394,1606,7723,-14449,16305,-12665,4756,3981,-11003,15426,-16207,13160,-7005,-804,8423,
-                -14053,16364,-14811,9760,-2404,-5520,12140,-15893,15893,-12140,5520,2404,-9760,14811,-16364,14053,-8423,804,
-                7005,-13160,16207,-15426,11003,-3981,3196,-9102,13623,-16069,16069,-13623,9102,-3196,-3196,9102,-13623,16069,
-                -16069,13623,-9102,3196,3196,-9102,13623,-16069,16069,-13623,9102,-3196,-3196,9102,-13623,16069,-16069,13623,
-                -9102,3196,2404,-7005,11003,-14053,15893,-16364,15426,-13160,9760,-5520,804,3981,-8423,12140,-14811,16207,
-                -16207,14811,-12140,8423,-3981,-804,5520,-9760,13160,-15426,16364,-15893,14053,-11003,7005,-2404,1606,-4756,
-                7723,-10394,12665,-14449,15679,-16305,16305,-15679,14449,-12665,10394,-7723,4756,-1606,-1606,4756,-7723,10394,
-                -12665,14449,-15679,16305,-16305,15679,-14449,12665,-10394,7723,-4756,1606,804,-2404,3981,-5520,7005,-8423,
-                9760,-11003,12140,-13160,14053,-14811,15426,-15893,16207,-16364,16364,-16207,15893,-15426,14811,-14053,13160,-12140,
-                11003,-9760,8423,-7005,5520,-3981,2404,-804,0,0,0,0,0,0,0,0,0,0,
-                0,0,0,0,0,0,0,0,0,0,0,0,0,0,0,0,0,0,
-                0,0,0,0,-804,2404,-3981,5520,-7005,8423,-9760,11003,-12140,13160,-14053,14811,-15426,15893,
-                -16207,16364,-16364,16207,-15893,15426,-14811,14053,-13160,12140,-11003,9760,-8423,7005,-5520,3981,-2404,804,
-                -1606,4756,-7723,10394,-12665,14449,-15679,16305,-16305,15679,-14449,12665,-10394,7723,-4756,1606,1606,-4756,
-                7723,-10394,12665,-14449,15679,-16305,16305,-15679,14449,-12665,10394,-7723,4756,-1606,-2404,7005,-11003,14053,
-                -15893,16364,-15426,13160,-9760,5520,-804,-3981,8423,-12140,14811,-16207,16207,-14811,12140,-8423,3981,804,
-                -5520,9760,-13160,15426,-16364,15893,-14053,11003,-7005,2404,-3196,9102,-13623,16069,-16069,13623,-9102,3196,
-                3196,-9102,13623,-16069,16069,-13623,9102,-3196,-3196,9102,-13623,16069,-16069,13623,-9102,3196,3196,-9102,
-                13623,-16069,16069,-13623,9102,-3196,-3981,11003,-15426,16207,-13160,7005,804,-8423,14053,-16364,14811,-9760,
-                2404,5520,-12140,15893,-15893,12140,-5520,-2404,9760,-14811,16364,-14053,8423,-804,-7005,13160,-16207,15426,
-                -11003,3981,-4756,12665,-16305,14449,-7723,-1606,10394,-15679,15679,-10394,1606,7723,-14449,16305,-12665,4756,
-                4756,-12665,16305,-14449,7723,1606,-10394,15679,-15679,10394,-1606,-7723,14449,-16305,12665,-4756,-5520,14053,
-                -16207,11003,-804,-9760,15893,-14811,7005,3981,-13160,16364,-12140,2404,8423,-15426,15426,-8423,-2404,12140,
-                -16364,13160,-3981,-7005,14811,-15893,9760,804,-11003,16207,-14053,5520,-6270,15137,-15137,6270,6270,-15137,
-                15137,-6270,-6270,15137,-15137,6270,6270,-15137,15137,-6270,-6270,15137,-15137,6270,6270,-15137,15137,-6270,
-                -6270,15137,-15137,6270,6270,-15137,15137,-6270,-7005,15893,-13160,804,12140,-16207,8423,5520,-15426,14053,
-                -2404,-11003,16364,-9760,-3981,14811,-14811,3981,9760,-16364,11003,2404,-14053,15426,-5520,-8423,16207,-12140,
-                -804,13160,-15893,7005,-7723,16305,-10394,-4756,15679,-12665,-1606,14449,-14449,1606,12665,-15679,4756,10394,
-                -16305,7723,7723,-16305,10394,4756,-15679,12665,1606,-14449,14449,-1606,-12665,15679,-4756,-10394,16305,-7723,
-                -8423,16364,-7005,-9760,16207,-5520,-11003,15893,-3981,-12140,15426,-2404,-13160,14811,-804,-14053,14053,804,
-                -14811,13160,2404,-15426,12140,3981,-15893,11003,5520,-16207,9760,7005,-16364,8423,-9102,16069,-3196,-13623,
-                13623,3196,-16069,9102,9102,-16069,3196,13623,-13623,-3196,16069,-9102,-9102,16069,-3196,-13623,13623,3196,
-                -16069,9102,9102,-16069,3196,13623,-13623,-3196,16069,-9102,-9760,15426,804,-15893,8423,11003,-14811,-2404,
-                16207,-7005,-12140,14053,3981,-16364,5520,13160,-13160,-5520,16364,-3981,-14053,12140,7005,-16207,2404,14811,
-                -11003,-8423,15893,-804,-15426,9760,-10394,14449,4756,-16305,1606,15679,-7723,-12665,12665,7723,-15679,-1606,
-                16305,-4756,-14449,10394,10394,-14449,-4756,16305,-1606,-15679,7723,12665,-12665,-7723,15679,1606,-16305,4756,
-                14449,-10394,-11003,13160,8423,-14811,-5520,15893,2404,-16364,804,16207,-3981,-15426,7005,14053,-9760,-12140,
-                12140,9760,-14053,-7005,15426,3981,-16207,-804,16364,-2404,-15893,5520,14811,-8423,-13160,11003,-11585,11585,
-                11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,
-                -11585,11585,11585,-11585,-11585,11585,11585,-11585,-11585,11585,11585,-11585,-12140,9760,14053,-7005,-15426,3981,
-                16207,-804,-16364,-2404,15893,5520,-14811,-8423,13160,11003,-11003,-13160,8423,14811,-5520,-15893,2404,16364,
-                804,-16207,-3981,15426,7005,-14053,-9760,12140,-12665,7723,15679,-1606,-16305,-4756,14449,10394,-10394,-14449,
-                4756,16305,1606,-15679,-7723,12665,12665,-7723,-15679,1606,16305,4756,-14449,-10394,10394,14449,-4756,-16305,
-                -1606,15679,7723,-12665,-13160,5520,16364,3981,-14053,-12140,7005,16207,2404,-14811,-11003,8423,15893,804,
-                -15426,-9760,9760,15426,-804,-15893,-8423,11003,14811,-2404,-16207,-7005,12140,14053,-3981,-16364,-5520,13160,
-                -13623,3196,16069,9102,-9102,-16069,-3196,13623,13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13623,3196,
-                16069,9102,-9102,-16069,-3196,13623,13623,-3196,-16069,-9102,9102,16069,3196,-13623,-14053,804,14811,13160,
-                -2404,-15426,-12140,3981,15893,11003,-5520,-16207,-9760,7005,16364,8423,-8423,-16364,-7005,9760,16207,5520,
-                -11003,-15893,-3981,12140,15426,2404,-13160,-14811,-804,14053,-14449,-1606,12665,15679,4756,-10394,-16305,-7723,
-                7723,16305,10394,-4756,-15679,-12665,1606,14449,14449,1606,-12665,-15679,-4756,10394,16305,7723,-7723,-16305,
-                -10394,4756,15679,12665,-1606,-14449,-14811,-3981,9760,16364,11003,-2404,-14053,-15426,-5520,8423,16207,12140,
-                -804,-13160,-15893,-7005,7005,15893,13160,804,-12140,-16207,-8423,5520,15426,14053,2404,-11003,-16364,-9760,
-                3981,14811,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,
-                -15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15426,-8423,
-                2404,12140,16364,13160,3981,-7005,-14811,-15893,-9760,804,11003,16207,14053,5520,-5520,-14053,-16207,-11003,
-                -804,9760,15893,14811,7005,-3981,-13160,-16364,-12140,-2404,8423,15426,-15679,-10394,-1606,7723,14449,16305,
-                12665,4756,-4756,-12665,-16305,-14449,-7723,1606,10394,15679,15679,10394,1606,-7723,-14449,-16305,-12665,-4756,
-                4756,12665,16305,14449,7723,-1606,-10394,-15679,-15893,-12140,-5520,2404,9760,14811,16364,14053,8423,804,
-                -7005,-13160,-16207,-15426,-11003,-3981,3981,11003,15426,16207,13160,7005,-804,-8423,-14053,-16364,-14811,-9760,
-                -2404,5520,12140,15893,-16069,-13623,-9102,-3196,3196,9102,13623,16069,16069,13623,9102,3196,-3196,-9102,
-                -13623,-16069,-16069,-13623,-9102,-3196,3196,9102,13623,16069,16069,13623,9102,3196,-3196,-9102,-13623,-16069,
-                -16207,-14811,-12140,-8423,-3981,804,5520,9760,13160,15426,16364,15893,14053,11003,7005,2404,-2404,-7005,
-                -11003,-14053,-15893,-16364,-15426,-13160,-9760,-5520,-804,3981,8423,12140,14811,16207,-16305,-15679,-14449,-12665,
-                -10394,-7723,-4756,-1606,1606,4756,7723,10394,12665,14449,15679,16305,16305,15679,14449,12665,10394,7723,
-                4756,1606,-1606,-4756,-7723,-10394,-12665,-14449,-15679,-16305,-16364,-16207,-15893,-15426,-14811,-14053,-13160,-12140,
-                -11003,-9760,-8423,-7005,-5520,-3981,-2404,-804,804,2404,3981,5520,7005,8423,9760,11003,12140,13160,
-                14053,14811,15426,15893,16207,16364,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,
-                -16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,-16384,
-                -16384,-16384,-16364,-16207,-15893,-15426,-14811,-14053,-13160,-12140,-11003,-9760,-8423,-7005,-5520,-3981,-2404,-804,
-                804,2404,3981,5520,7005,8423,9760,11003,12140,13160,14053,14811,15426,15893,16207,16364,-16305,-15679,
-                -14449,-12665,-10394,-7723,-4756,-1606,1606,4756,7723,10394,12665,14449,15679,16305,16305,15679,14449,12665,
-                10394,7723,4756,1606,-1606,-4756,-7723,-10394,-12665,-14449,-15679,-16305,-16207,-14811,-12140,-8423,-3981,804,
-                5520,9760,13160,15426,16364,15893,14053,11003,7005,2404,-2404,-7005,-11003,-14053,-15893,-16364,-15426,-13160,
-                -9760,-5520,-804,3981,8423,12140,14811,16207,-16069,-13623,-9102,-3196,3196,9102,13623,16069,16069,13623,
-                9102,3196,-3196,-9102,-13623,-16069,-16069,-13623,-9102,-3196,3196,9102,13623,16069,16069,13623,9102,3196,
-                -3196,-9102,-13623,-16069,-15893,-12140,-5520,2404,9760,14811,16364,14053,8423,804,-7005,-13160,-16207,-15426,
-                -11003,-3981,3981,11003,15426,16207,13160,7005,-804,-8423,-14053,-16364,-14811,-9760,-2404,5520,12140,15893,
-                -15679,-10394,-1606,7723,14449,16305,12665,4756,-4756,-12665,-16305,-14449,-7723,1606,10394,15679,15679,10394,
-                1606,-7723,-14449,-16305,-12665,-4756,4756,12665,16305,14449,7723,-1606,-10394,-15679,-15426,-8423,2404,12140,
-                16364,13160,3981,-7005,-14811,-15893,-9760,804,11003,16207,14053,5520,-5520,-14053,-16207,-11003,-804,9760,
-                15893,14811,7005,-3981,-13160,-16364,-12140,-2404,8423,15426,-15137,-6270,6270,15137,15137,6270,-6270,-15137,
-                -15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,6270,15137,15137,6270,-6270,-15137,-15137,-6270,
-                6270,15137,15137,6270,-6270,-15137,-14811,-3981,9760,16364,11003,-2404,-14053,-15426,-5520,8423,16207,12140,
-                -804,-13160,-15893,-7005,7005,15893,13160,804,-12140,-16207,-8423,5520,15426,14053,2404,-11003,-16364,-9760,
-                3981,14811,-14449,-1606,12665,15679,4756,-10394,-16305,-7723,7723,16305,10394,-4756,-15679,-12665,1606,14449,
-                14449,1606,-12665,-15679,-4756,10394,16305,7723,-7723,-16305,-10394,4756,15679,12665,-1606,-14449,-14053,804,
-                14811,13160,-2404,-15426,-12140,3981,15893,11003,-5520,-16207,-9760,7005,16364,8423,-8423,-16364,-7005,9760,
-                16207,5520,-11003,-15893,-3981,12140,15426,2404,-13160,-14811,-804,14053,-13623,3196,16069,9102,-9102,-16069,
-                -3196,13623,13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13623,3196,16069,9102,-9102,-16069,-3196,13623,
-                13623,-3196,-16069,-9102,9102,16069,3196,-13623,-13160,5520,16364,3981,-14053,-12140,7005,16207,2404,-14811,
-                -11003,8423,15893,804,-15426,-9760,9760,15426,-804,-15893,-8423,11003,14811,-2404,-16207,-7005,12140,14053,
-                -3981,-16364,-5520,13160,-12665,7723,15679,-1606,-16305,-4756,14449,10394,-10394,-14449,4756,16305,1606,-15679,
-                -7723,12665,12665,-7723,-15679,1606,16305,4756,-14449,-10394,10394,14449,-4756,-16305,-1606,15679,7723,-12665,
-                -12140,9760,14053,-7005,-15426,3981,16207,-804,-16364,-2404,15893,5520,-14811,-8423,13160,11003,-11003,-13160,
-                8423,14811,-5520,-15893,2404,16364,804,-16207,-3981,15426,7005,-14053,-9760,12140] AS nq
-            ), sb AS (
-                SELECT doc_id AS media_id, g.g, k.k,
-                       CASE WHEN (k.k + doc_id + g.g // 12) % 4 = 0
-                       THEN CAST(floor(
-                           (CASE (k.k + g.g // 12) % 3
-                                 WHEN 0 THEN 2.0
-                                 WHEN 1 THEN 1.0
-                                 ELSE 0.5 END)
-                           * ((2.0 * ((doc_id*7 + (g.g//12)*11
-                                       + k.k*5 + (g.g%12)*3)
-                                      % (1 << (3 + (k.k + doc_id) % 3))
-                                + 1
-                                - (1 << (2 + (k.k + doc_id) % 3))))
-                              / ((1 << (3 + (k.k + doc_id) % 3)) - 1))
-                           * 1e6 + 0.5) AS BIGINT)
-                       ELSE CAST(0 AS BIGINT) END AS s_micro
-                FROM documents,
-                     (SELECT unnest(range(0, 24)) AS g) g,
-                     (SELECT unnest(range(0, 32)) AS k) k
-            ), coef AS (
-                SELECT m.m, j.j, k.k,
-                       CAST(CASE WHEN m.m % 2 = 0
-                            THEN dq[(m.m // 2) * 64 + j.j + 1]
-                                 * nq[j.j * 32 + k.k + 1]
-                            ELSE dq[(m.m // 2) * 64 + 32 + j.j + 1]
-                                 * nq[(32 + j.j) * 32 + k.k + 1]
-                            END AS BIGINT) AS c
-                FROM tabs,
-                     (SELECT unnest(range(0, 16)) AS m) m,
-                     (SELECT unnest(range(0, 32)) AS j) j,
-                     (SELECT unnest(range(0, 32)) AS k) k
-            ), acc AS (
-                SELECT sb.media_id, sb.g + c.m AS og, c.j,
-                       CAST(SUM(c.c * sb.s_micro) AS BIGINT) AS a
-                FROM sb JOIN coef c ON c.k = sb.k
-                WHERE sb.s_micro <> 0 AND sb.g + c.m < 24
-                GROUP BY sb.media_id, sb.g + c.m, c.j
-            ), pcm AS (
-                SELECT media_id,
-                       CAST((a - ((a % 268435456) + 268435456)
-                                 % 268435456) // 268435456
-                            AS BIGINT) AS x
-                FROM acc
-            )
-            SELECT d.doc_id AS media_id, CAST(2 AS INT) AS n_frames,
-                   CAST(768 AS BIGINT) AS n_pcm,
-                   CAST(COALESCE(SUM(p.x), 0) AS BIGINT)
-                       AS pcm_sum_micro,
-                   CAST(COALESCE(SUM(abs(p.x)), 0) AS BIGINT)
-                       AS pcm_sum_abs_micro,
-                   CAST(COALESCE(MAX(abs(p.x)), 0) AS BIGINT)
-                       AS pcm_peak_micro
-            FROM documents d LEFT JOIN pcm p ON p.media_id = d.doc_id
-            GROUP BY d.doc_id ORDER BY media_id
-        """,
         # Layer II closed form: coded subbands (sb+id)%5==0, ladder
         # prefix n per region, scfsi-effective scalefactors, grouped
         # and ungrouped codes (same modular generator), requant
         # (2c+1-n)/n on the power-of-two scale grid
-        "mm_mp3_decode": _MM_MP3_DECODE_SQL,
         "mm_mp2_decode": """
             WITH sbs AS (
                 SELECT doc_id, sb.sb, g.g, t.t,
@@ -8124,85 +7647,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(fb) AS BIGINT) AS frame_bytes
             FROM f GROUP BY doc_id ORDER BY media_id
         """,
-        "mm_aac_decode": """
-            -- closed forms of _aac_lc_frame_spec / _aac_lc_short_
-            -- frame: 2+mid%3 long frames (band b < 8+mid%3, one
-            -- line per (f,b)) then one EIGHT_SHORT frame (grouping
-            -- pattern mid%4, band b < 4+mid%3, one line per window
-            -- of each (group g, b)).  Everywhere:
-            --   m -> cube magnitude [0,1,8,27], |q|^(4/3) exactly
-            --        [0,1,16,81]; k -> scalefactor 100+4k, gain 2^k
-            -- long: m=(mid+f+b)%4, k=(mid+2f+b)%4,
-            --       sign = -1 iff (mid+2f+3b)%2
-            -- short: m=(mid+g+b)%4, k=(mid+2g+b)%4, window j sign
-            --       = -1 iff (mid+g+b+j)%2, so the signed sum over
-            --       a group of even length cancels and an odd
-            --       length leaves the j=0 sign
-            WITH p AS (
-                SELECT doc_id,
-                       2 + doc_id % 3 AS nfl,
-                       8 + doc_id % 3 AS msfb_l,
-                       4 + doc_id % 3 AS msfb_s,
-                       doc_id % 4 AS pat
-                FROM documents
-            ), longcells AS (
-                SELECT p.doc_id,
-                       (p.doc_id + f.f + b.b) % 4 AS m,
-                       (p.doc_id + 2*f.f + b.b) % 4 AS k,
-                       CAST(1 AS BIGINT) AS nwin,
-                       CAST(CASE WHEN (p.doc_id + 2*f.f + 3*b.b) % 2
-                                 = 1 THEN -1 ELSE 1 END
-                            AS BIGINT) AS ssum
-                FROM p
-                JOIN (SELECT unnest(range(0, 4)) AS f) f
-                     ON f.f < p.nfl
-                JOIN (SELECT unnest(range(0, 10)) AS b) b
-                     ON b.b < p.msfb_l
-            ), grp AS (
-                SELECT * FROM (VALUES
-                    (0,0,1),(0,1,1),(0,2,1),(0,3,1),
-                    (0,4,1),(0,5,1),(0,6,1),(0,7,1),
-                    (1,0,2),(1,1,2),(1,2,4),
-                    (2,0,4),(2,1,4),
-                    (3,0,8)
-                ) AS t(pat, g, glen)
-            ), shortcells AS (
-                SELECT p.doc_id,
-                       (p.doc_id + grp.g + b.b) % 4 AS m,
-                       (p.doc_id + 2*grp.g + b.b) % 4 AS k,
-                       CAST(grp.glen AS BIGINT) AS nwin,
-                       CAST(CASE WHEN grp.glen % 2 = 0 THEN 0
-                            WHEN (p.doc_id + grp.g + b.b) % 2 = 1
-                            THEN -1 ELSE 1 END AS BIGINT) AS ssum
-                FROM p
-                JOIN grp ON grp.pat = p.pat
-                JOIN (SELECT unnest(range(0, 6)) AS b) b
-                     ON b.b < p.msfb_s
-            ), v AS (
-                SELECT doc_id, m, nwin, ssum,
-                       CAST((CASE m WHEN 0 THEN 0 WHEN 1 THEN 1
-                             WHEN 2 THEN 16 ELSE 81 END)
-                            * (CASE k WHEN 0 THEN 1 WHEN 1 THEN 2
-                               WHEN 2 THEN 4 ELSE 8 END)
-                            AS BIGINT) AS absval
-                FROM (SELECT * FROM longcells
-                      UNION ALL SELECT * FROM shortcells)
-            )
-            SELECT p.doc_id AS media_id,
-                   CAST(3 + p.doc_id % 3 AS INT) AS n_frames,
-                   CAST(p.msfb_s AS INT) AS max_sfb,
-                   CAST(SUM(CASE WHEN m > 0 THEN nwin ELSE 0 END)
-                        AS INT) AS n_lines,
-                   CAST(SUM(CASE WHEN m = 3 THEN nwin ELSE 0 END)
-                        AS INT) AS n_escapes,
-                   CAST(SUM(ssum * absval) AS BIGINT) AS sum_spec,
-                   CAST(SUM(nwin * absval) AS BIGINT) AS sum_abs,
-                   CAST(MAX(absval) AS BIGINT) AS max_abs
-            FROM v
-            JOIN p ON p.doc_id = v.doc_id
-            GROUP BY p.doc_id, p.msfb_s
-            ORDER BY media_id
-        """,
         "mm_aac_elements": """
             -- closed forms of _aac_elements_params(mid):
             --   n_frames = 2 + mid % 3, profile = mid % 4,
@@ -8272,104 +7716,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(cab AS INT) AS cabac
             FROM p ORDER BY media_id
         """,
-        # PDF closed form: page/run grid -> the exact extracted text
-        "doc_pdf_profile": """
-            WITH runs AS (
-                SELECT doc_id, p.p, r.r,
-                       'doc-' || CAST(doc_id AS VARCHAR) || ' page-'
-                       || CAST(p.p AS VARCHAR) || ' run-'
-                       || CAST(r.r AS VARCHAR) AS run
-                FROM documents,
-                     (SELECT unnest(range(0, 4)) AS p) p,
-                     (SELECT unnest(range(0, 3)) AS r) r
-                WHERE p.p < 1 + doc_id % 4 AND r.r < 1 + doc_id % 3
-            ), texts AS (
-                SELECT doc_id,
-                       string_agg(run, ' ' ORDER BY p, r) AS text
-                FROM runs GROUP BY doc_id
-            )
-            SELECT doc_id AS media_id, '1.7' AS version,
-                   CAST(2 * (1 + doc_id % 4) + 2 AS INT) AS n_objects,
-                   CAST(1 + doc_id % 4 AS INT) AS n_pages,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   substr(text, 1, 64) AS text_head
-            FROM texts ORDER BY media_id
-        """,
-        "doc_pdf_encrypted": """
-            WITH runs AS (
-                SELECT doc_id, p.p, r.r,
-                       'doc-' || CAST(doc_id AS VARCHAR) || ' page-'
-                       || CAST(p.p AS VARCHAR) || ' run-'
-                       || CAST(r.r AS VARCHAR) AS run
-                FROM documents,
-                     (SELECT unnest(range(0, 4)) AS p) p,
-                     (SELECT unnest(range(0, 3)) AS r) r
-                WHERE p.p < 1 + doc_id % 4 AND r.r < 1 + doc_id % 3
-            ), texts AS (
-                SELECT doc_id,
-                       string_agg(run, ' ' ORDER BY p, r) AS text
-                FROM runs GROUP BY doc_id
-            )
-            -- identical logical profile to doc_pdf_profile except:
-            -- version 1.4 (the RC4 handler era) and one extra object
-            -- (the /Encrypt dictionary)
-            SELECT doc_id AS media_id, '1.4' AS version,
-                   CAST(2 * (1 + doc_id % 4) + 3 AS INT) AS n_objects,
-                   CAST(1 + doc_id % 4 AS INT) AS n_pages,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   substr(text, 1, 64) AS text_head
-            FROM texts ORDER BY media_id
-        """,
-        "doc_pdf_xrefstream": """
-            WITH runs AS (
-                SELECT doc_id, p.p, r.r,
-                       'doc-' || CAST(doc_id AS VARCHAR) || ' page-'
-                       || CAST(p.p AS VARCHAR) || ' run-'
-                       || CAST(r.r AS VARCHAR) AS run
-                FROM documents,
-                     (SELECT unnest(range(0, 4)) AS p) p,
-                     (SELECT unnest(range(0, 3)) AS r) r
-                WHERE p.p < 1 + doc_id % 4 AND r.r < 1 + doc_id % 3
-            ), texts AS (
-                SELECT doc_id,
-                       string_agg(run, ' ' ORDER BY p, r) AS text
-                FROM runs GROUP BY doc_id
-            )
-            -- IDENTICAL logical profile to doc_pdf_profile: the
-            -- xref-stream serialization adds only plumbing objects
-            -- (/ObjStm + /XRef), which the census excludes; version
-            -- tag is the PDF 1.5 the feature requires
-            SELECT doc_id AS media_id, '1.5' AS version,
-                   CAST(2 * (1 + doc_id % 4) + 2 AS INT) AS n_objects,
-                   CAST(1 + doc_id % 4 AS INT) AS n_pages,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   substr(text, 1, 64) AS text_head
-            FROM texts ORDER BY media_id
-        """,
-        "doc_font_profile": """
-            SELECT doc_id AS media_id,
-                   CASE WHEN doc_id % 3 = 0 THEN 'cff'
-                        ELSE 'truetype' END AS flavor,
-                   CAST(4 AS INT) AS n_tables,
-                   CAST([1000,2048,1024,2000][doc_id % 4 + 1] AS INT)
-                       AS units_per_em,
-                   'Corpus Sans ' || CAST(doc_id % 29 AS VARCHAR)
-                       AS family
-            FROM documents ORDER BY media_id
-        """,
-        "doc_woff_profile": """
-            -- identical logical profile to doc_font_profile: the
-            -- WOFF wrapper is transport
-            SELECT doc_id AS media_id,
-                   CASE WHEN doc_id % 3 = 0 THEN 'cff'
-                        ELSE 'truetype' END AS flavor,
-                   CAST(4 AS INT) AS n_tables,
-                   CAST([1000,2048,1024,2000][doc_id % 4 + 1] AS INT)
-                       AS units_per_em,
-                   'Corpus Sans ' || CAST(doc_id % 29 AS VARCHAR)
-                       AS family
-            FROM documents ORDER BY media_id
-        """,
         "mm_heif_dims": """
             SELECT doc_id AS media_id,
                    ['heic','avif','mif1'][doc_id % 3 + 1] AS brand,
@@ -8380,6 +7726,13 @@ def oracle_sql() -> dict[str, str]:
                    CAST(1 + doc_id % 3 AS INT) AS n_extents
             FROM documents ORDER BY media_id
         """,
+        # Layer I synth params are closed-form per (frame f, subband
+        # sb, granule g): i in [0,768) decomposes as f=i//384,
+        # sb=(i//12)%32, g=i%12; coded iff (sb+id+f)%4==0 with
+        # nb=3+(sb+id)%3 bits, code=(id*7+f*11+sb*5+g*3)%2^nb,
+        # scalefactor 2*2^-((sb+f)%3); the dequantization expression
+        # mirrors the decoder op-for-op (IEEE-exact, micro-quantized
+        # per sample before the order-independent bigint sum)
         "mm_mp3_layer1_decode": """
             WITH s AS (
                 SELECT doc_id AS media_id,

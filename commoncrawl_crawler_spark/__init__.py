@@ -8,7 +8,8 @@ Streaming for incremental pieces.
 
 Layout (maps SURVEY.md sections):
   session     - tuned SparkSession builders (AQE, shuffle partitions)
-  sources     - table loaders, ARC-style archive reader, time-series
+  sources     - table loaders, ARC-style archive reader, time-series,
+                tar/zip pack files
   functions   - scalar library: URLs, hashing/simhash, text analysis
   operators   - filters, joins, aggregates, windows, setops, dedup,
                 similarity, graph (PageRank/CC), merge, multimodal

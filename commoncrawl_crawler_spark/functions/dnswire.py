@@ -30,9 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.multimodal import _synthesize_media
-
 from ..operators.parseguard import guard
+from ..sources.packfiles import _synthesize_media
 
 TYPE_A = 1
 TYPE_NS = 2
@@ -222,9 +221,3 @@ def dns_resolutions(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         _parse, DNS_SCHEMA
     )
-
-
-from ..operators.container import _corrupt_guard  # noqa: E402
-
-parse_response = _corrupt_guard("dns")(parse_response)
-decode_name = _corrupt_guard("dns-name")(decode_name)

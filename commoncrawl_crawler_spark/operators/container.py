@@ -25,8 +25,8 @@ What is REAL here (no external libraries, spec-level parsing):
 
 What still needs an external codec (documented, not faked): the
 layer III / AAC compressed-audio sample decode and H.26x video
-samples. Layers I and II decode fully in-repo (subband
-dequantization here, polyphase synthesis in operators/mpegsynth.py).
+samples. Layers I and II decode to dequantized subband samples
+in-repo; the polyphase synthesis to PCM is not implemented.
 The demux layer above them -- the part a 100 TB corpus scan actually
 runs to filter/route/slice media -- is complete and real.
 
@@ -34,7 +34,7 @@ At 100 TB: containers are demuxed where they land (narrow
 mapInPandas, Arrow batches); only fixed-width metadata rows and the
 small per-sample stats ever shuffle, never the payload bytes. The
 synthesizers repartition the narrow id column to defaultParallelism
-BEFORE attaching payloads (see multimodal._synthesize_media).
+BEFORE attaching payloads (see packfiles._synthesize_media).
 """
 
 from __future__ import annotations
@@ -53,13 +53,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import (
-    _synthesize_media,
-    encode_jpeg_gray,
-    parse_jpeg_gray,
-)
-
+from .multimodal import encode_jpeg_gray, parse_jpeg_gray
 from .parseguard import guard
+from ..sources.packfiles import _synthesize_media
+
 # --------------------------------------------------------------------
 # ISO BMFF (MP4) writer -- deterministic test-fixture muxer
 # --------------------------------------------------------------------
@@ -311,6 +308,14 @@ def _find(blob: bytes, start: int, end: int, tag: bytes):
     return None
 
 
+def _need(blob: bytes, start: int, end: int, tag: bytes):
+    """_find for a box the parse cannot do without."""
+    found = _find(blob, start, end, tag)
+    if found is None:
+        raise ValueError(f"missing {tag.decode('latin-1')} box")
+    return found
+
+
 def _sample_locations(
     stsc: list[tuple[int, int]],
     stco: list[int],
@@ -356,7 +361,7 @@ def parse_mp4_tracks(blob: bytes) -> list[dict]:
         mdia = _find(blob, b, e, b"mdia")
         if mdia is None:
             raise ValueError("trak without mdia")
-        mdhd = _find(blob, *mdia, b"mdhd")
+        mdhd = _need(blob, *mdia, b"mdhd")
         md_ver = blob[mdhd[0]]
         if md_ver == 0:
             timescale, duration = struct.unpack(
@@ -369,12 +374,12 @@ def parse_mp4_tracks(blob: bytes) -> list[dict]:
             duration = struct.unpack(
                 ">Q", blob[mdhd[0] + 24 : mdhd[0] + 32]
             )[0]
-        hdlr = _find(blob, *mdia, b"hdlr")
+        hdlr = _need(blob, *mdia, b"hdlr")
         handler = blob[hdlr[0] + 8 : hdlr[0] + 12].decode("ascii")
-        minf = _find(blob, *mdia, b"minf")
-        stbl = _find(blob, *minf, b"stbl")
+        minf = _need(blob, *mdia, b"minf")
+        stbl = _need(blob, *minf, b"stbl")
 
-        stsd = _find(blob, *stbl, b"stsd")
+        stsd = _need(blob, *stbl, b"stsd")
         entry_start = stsd[0] + 8  # past version/flags + entry_count
         codec = blob[entry_start + 4 : entry_start + 8].decode("ascii")
         width = height = channels = sample_rate = 0
@@ -1134,8 +1139,7 @@ def decode_layer1(media: DataFrame) -> DataFrame:
 # pairs 4/3+1/2, 8/5+1/2, 16/9+1/2 expand to the same expression), so
 # no decimal constants are copied -- only the integer level ladders,
 # which are the published allocation table.
-# 1152 samples per frame = 36 granules of 32, feeding the same
-# polyphase synthesis as Layer I (operators/mpegsynth.py).
+# 1152 samples per frame = 36 granules of 32 subband samples.
 
 # table B.2a level ladders (48/44.1 kHz high-rate table): subbands
 # 0-2 use the unstepped 4-bit ladder, 3-10 the stepped 4-bit ladder,
@@ -1494,11 +1498,15 @@ def parse_exif_tiff(tiff: bytes) -> dict:
             else:
                 val = read_value(typ, count, raw)
             if tag == 0x8769:
+                if not isinstance(val, int) or val in seen:
+                    raise ValueError("bad Exif IFD pointer")
+                seen.add(val)
                 walk(val, out)
             else:
                 out[tag] = val
         return out
 
+    seen = {ifd0}
     out = walk(ifd0, {"byte_order": bo.decode("ascii")})
     return out
 
@@ -1513,6 +1521,7 @@ def embed_exif_jpeg(jpeg: bytes, tiff: bytes) -> bytes:
     return jpeg[:2] + app1 + jpeg[2:]
 
 
+@guard("jpeg-exif")
 def extract_exif_from_jpeg(jpeg: bytes) -> dict | None:
     """Marker walk to the APP1 Exif segment (skipping other APPn);
     None when the image carries no Exif."""
@@ -1777,17 +1786,17 @@ def parse_fmp4_fragments(blob: bytes) -> dict:
     mvex = _find(blob, *moov, b"mvex")
     if mvex is None:
         raise ValueError("not fragmented: no mvex/trex")
-    trex = _find(blob, *mvex, b"trex")
+    trex = _need(blob, *mvex, b"trex")
     _, _, trex_duration, trex_size, _ = struct.unpack(
         ">IIIII", blob[trex[0] + 4 : trex[0] + 24]
     )
-    trak = _find(blob, *moov, b"trak")
-    mdia = _find(blob, *trak, b"mdia")
-    mdhd = _find(blob, *mdia, b"mdhd")
+    trak = _need(blob, *moov, b"trak")
+    mdia = _need(blob, *trak, b"mdia")
+    mdhd = _need(blob, *mdia, b"mdhd")
     timescale = struct.unpack(">I", blob[mdhd[0] + 12 : mdhd[0] + 16])[0]
-    minf = _find(blob, *mdia, b"minf")
-    stbl = _find(blob, *minf, b"stbl")
-    stsd = _find(blob, *stbl, b"stsd")
+    minf = _need(blob, *mdia, b"minf")
+    stbl = _need(blob, *minf, b"stbl")
+    stsd = _need(blob, *stbl, b"stsd")
     entry = stsd[0] + 8
     width, height = struct.unpack(
         ">HH", blob[entry + 32 : entry + 36]
@@ -1798,10 +1807,10 @@ def parse_fmp4_fragments(blob: bytes) -> dict:
         if tag != b"moof":
             continue
         moof_start = b - 8
-        mfhd = _find(blob, b, e, b"mfhd")
+        mfhd = _need(blob, b, e, b"mfhd")
         seq = struct.unpack(">I", blob[mfhd[0] + 4 : mfhd[0] + 8])[0]
-        traf = _find(blob, b, e, b"traf")
-        tfhd = _find(blob, *traf, b"tfhd")
+        traf = _need(blob, b, e, b"traf")
+        tfhd = _need(blob, *traf, b"tfhd")
         tf_flags = int.from_bytes(blob[tfhd[0] + 1 : tfhd[0] + 4], "big")
         pos = tfhd[0] + 8  # skip version/flags + track_id
         base_offset = moof_start if tf_flags & _TFHD_BASE_IS_MOOF else 0
@@ -1818,14 +1827,14 @@ def parse_fmp4_fragments(blob: bytes) -> dict:
         if tf_flags & _TFHD_DEFAULT_SIZE:
             default_size = struct.unpack(">I", blob[pos : pos + 4])[0]
             pos += 4
-        tfdt = _find(blob, *traf, b"tfdt")
+        tfdt = _need(blob, *traf, b"tfdt")
         tfdt_ver = blob[tfdt[0]]
         decode_time = (
             struct.unpack(">Q", blob[tfdt[0] + 4 : tfdt[0] + 12])[0]
             if tfdt_ver == 1
             else struct.unpack(">I", blob[tfdt[0] + 4 : tfdt[0] + 8])[0]
         )
-        trun = _find(blob, *traf, b"trun")
+        trun = _need(blob, *traf, b"trun")
         tr_flags = int.from_bytes(blob[trun[0] + 1 : trun[0] + 4], "big")
         p = trun[0] + 4
         count = struct.unpack(">I", blob[p : p + 4])[0]
@@ -1836,6 +1845,14 @@ def parse_fmp4_fragments(blob: bytes) -> dict:
             p += 4
         if tr_flags & 0x4:
             p += 4  # first_sample_flags
+        # a stomped count must not drive the loop: per-sample fields
+        # have to fit in the trun box, default-sized samples in the file
+        # (0xF00 = duration | size | flags | composition offset)
+        width = 4 * bin(tr_flags & 0xF00).count("1")
+        if (width and count * width > trun[1] - p) or (
+            not width and count * max(default_size, 1) > len(blob)
+        ):
+            raise ValueError(f"trun sample count {count} overruns its data")
         samples = []
         cursor = base_offset + data_off
         t = decode_time
@@ -1942,53 +1959,6 @@ def decode_fmp4(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         _decode, FMP4_STATS
     )
-
-
-def _corrupt_guard(fmt: str):
-    """Normalize low-level decode blowups (short struct reads, bad
-    indexing, mojibake) into ValueError('corrupt <fmt>: ...') -- a
-    100 TB scan wants ONE exception class to count/quarantine per
-    record, never a grab-bag of struct.error/TypeError.
-    NotImplementedError (a truly unsupported feature, not corruption)
-    passes through untouched."""
-    import functools
-    import struct as _struct
-    import zlib as _zlib
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            try:
-                return fn(*args, **kwargs)
-            except (ValueError, NotImplementedError):
-                raise
-            except (
-                _struct.error,
-                _zlib.error,
-                IndexError,
-                TypeError,
-                KeyError,
-                UnicodeDecodeError,
-            ) as exc:
-                raise ValueError(f"corrupt {fmt}: {exc}") from exc
-
-        return wrapper
-
-    return deco
-
-
-parse_mp4_tracks = _corrupt_guard("mp4")(parse_mp4_tracks)
-parse_fmp4_fragments = _corrupt_guard("fmp4")(parse_fmp4_fragments)
-parse_mpeg_audio_frames = _corrupt_guard("mpeg-audio")(
-    parse_mpeg_audio_frames
-)
-decode_mpeg1_layer1_frame = _corrupt_guard("mpeg1-layer1")(
-    decode_mpeg1_layer1_frame
-)
-parse_exif_tiff = _corrupt_guard("tiff")(parse_exif_tiff)
-extract_exif_from_jpeg = _corrupt_guard("jpeg-exif")(
-    extract_exif_from_jpeg
-)
 
 
 # --------------------------------------------------------------------
@@ -2137,9 +2107,6 @@ def ico_entries(media: DataFrame) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(
         _walk, ICO_SCHEMA
     )
-
-
-parse_ico_entries = _corrupt_guard("ico")(parse_ico_entries)
 
 
 # --------------------------------------------------------------------

@@ -24,7 +24,6 @@ here is shuffle-free (narrow mapInPandas / explode); repartition
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -44,6 +43,8 @@ from pyspark.sql.types import (
 
 from .parseguard import guard
 from ..checkpointing import ckpt_lazy
+from ..sources.packfiles import _synthesize_media
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -54,96 +55,6 @@ MEDIA_SCHEMA = StructType(
 )
 
 N_FEATURES = 16  # byte-histogram bins for the fake feature extractor
-
-
-_MEDIA_BLOB_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-# row counts by (applicationId, input file set): parquet footers are a
-# driver-side metadata read, so sizing the fan-out costs no Spark job
-_ROWS_CACHE: dict = {}
-
-
-def python_stage_parallelism(
-    df: DataFrame, rows_per_task: int | None = None
-) -> int:
-    """Partition count for a per-row Python codec stage over `df`:
-    derived from the input's row count instead of a constant (guide
-    2.5 -- partitioning that adapts to input size). Capped at
-    defaultParallelism, so at cluster scale (rows >> cap *
-    rows_per_task) this IS defaultParallelism and behavior is
-    unchanged; at small scale it stops paying ~15-30 ms of Python
-    task overhead for cores the data cannot fill (measured at sf0.1:
-    a trivial two-stage mapInPandas chain over 5k rows costs ~1.3 s
-    at 32 partitions vs ~0.5 s at 8).
-
-    The row count comes from the scan's parquet footers (no Spark
-    job), cached per (application, file set). Any shape where the
-    count is unknowable from footers -- non-parquet input, object
-    stores, filters above the scan making the estimate an OVERcount
-    -- falls back to (or errs toward) full parallelism, never below.
-
-    CAVEAT (per ADVICE.md): a row-MULTIPLYING plan above the scan
-    (explode, join) makes the footer count an UNDERcount and would
-    under-parallelize the stage. Only call this on raw scan
-    projections (the _synthesize_media shape); for derived inputs use
-    loopscope.known_rows / an observed count instead.
-    """
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism
-    rpt = rows_per_task or int(
-        os.environ.get("SPARK_GRAFT_ROWS_PER_TASK", "256")
-    )
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        return cap
-    if not files:
-        return cap
-    key = (sc.applicationId, files)
-    n = _ROWS_CACHE.get(key)
-    if n is None:
-        try:
-            import pyarrow.parquet as pq
-
-            n = 0
-            for f in files:
-                if not f.startswith("file:"):
-                    return cap
-                path = f[len("file:"):]
-                if not path.endswith(".parquet"):
-                    return cap
-                n += pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return cap
-        _ROWS_CACHE[key] = n
-    return max(1, min(cap, -(-n // rpt)))
-
-
-def _synthesize_media(documents: DataFrame, blob_fn) -> DataFrame:
-    """Shared synthesizer shell: narrow doc_id projection,
-    repartitioned FIRST (the single-file documents scan is one
-    partition, which would serialize the Python codec work on one
-    core -- see the module docstring) to a row-count-derived task
-    count, then an Arrow-batched `blob_fn(doc_id) -> bytes` per
-    row."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(m) for m in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"media_id": ids, "content": [blob_fn(m) for m in ids]}
-            )
-
-    return (
-        documents.select("doc_id")
-        .repartition(python_stage_parallelism(documents))
-        .mapInPandas(_synth, _MEDIA_BLOB_SCHEMA)
-    )
 
 
 def _decode_rgb_features(media: DataFrame, parse_fn) -> DataFrame:

@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import _synthesize_media
+from ..sources.packfiles import _synthesize_media
 
 from .parseguard import guard
 

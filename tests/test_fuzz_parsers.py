@@ -95,7 +95,6 @@ def test_corruption_bounds_are_named_errors():
 
     from commoncrawl_crawler_spark.operators import container as ct
     from commoncrawl_crawler_spark.operators import multimodal as mm
-    from commoncrawl_crawler_spark.operators import pdfdoc as pdf
 
     # GIF LZW: a stomped min-code-size must not size a 2^255 table
     with pytest.raises(ValueError, match="LZW min code size"):
@@ -105,16 +104,6 @@ def test_corruption_bounds_are_named_errors():
     tag = b"ID3\x03\x00\x00\x7f\x7f\x7f\x7f" + b"\x00" * 16
     assert ct._id3v2_size(tag) == len(tag)
     assert ct.parse_id3v2_frames(tag) == []
-
-    # PDF xref stream: /Index must not walk past the stream data
-    with pytest.raises(ValueError, match="Index overruns"):
-        pdf.parse_xref_stream(
-            b"<< /W [1 2 2] /Index [0 1000000] >>", b"\x01\x00\x05\x00\x00"
-        )
-    with pytest.raises(ValueError, match="undecodable"):
-        pdf.parse_xref_stream(b"<< /W [1 2 2] /Size 1 >>", None)
-    with pytest.raises(ValueError, match="undecodable"):
-        pdf.parse_objstm(b"<< /N 1 /First 4 >>", None)
 
     # MP4: stomped stsz sample count must not allocate
     body = struct.pack(">I", 0) + struct.pack(">II", 4, 1 << 30)
@@ -134,8 +123,7 @@ def test_every_byte_parser_is_fuzz_covered():
     MODULES = [
         "operators/multimodal.py", "operators/container.py",
         "operators/mediameta.py", "operators/videobits.py",
-        "operators/mp3layer3.py", "operators/pdfdoc.py",
-        "operators/aacdecode.py", "sources/packfiles.py",
+        "sources/packfiles.py",
         "sources/archive.py", "functions/dnswire.py",
         "functions/ricecoding.py",
     ]
@@ -152,12 +140,6 @@ def test_every_byte_parser_is_fuzz_covered():
         "parse_slice_header": "h264_slices",
         "parse_av1_sequence_header": "av1",
         "parse_raw_data_block_elements": "aac_elements",
-        "decode_mpeg1_layer3_frame": "mp3_layer3_decode",
-        "decode_layer3_stream_full": "mp3_layer3_decode",
-        "decode_layer3_stream": "mp3_layer3_decode",
-        "parse_objstm": "pdf",
-        "parse_xref_stream": "pdf",
-        "decode_sce": "aac_lc",
         "decode_name": "dns_wire",
     }
     # direct registrations whose target name differs from the
@@ -184,10 +166,6 @@ def test_every_byte_parser_is_fuzz_covered():
         "parse_audio_specific_config": "audio_specific_config",
         "parse_annexb": "h264_stream",
         "parse_av1_obus": "av1",
-        "decode_layer3_to_pcm_q": "mp3_layer3_decode",
-        "parse_pdf": "pdf", "parse_sfnt": "sfnt",
-        "parse_woff": "woff",
-        "decode_aac_lc_stream": "aac_lc",
         "parse_tar_members": "tar", "parse_zip_members": "zip",
         "parse_response": "dns_wire",
     }

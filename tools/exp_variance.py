@@ -33,9 +33,7 @@ QUERIES = [
     "dedup_minhash_clusters",
     "dedup_sketch_quality",
     "graph_opic",
-    "mm_aac_decode",
     "dq_profile_orders",
-    "mm_mp3_decode",
     "graph_redirect_resolve",
     "stream_stream_attribution",
     "fn_parse_headers",

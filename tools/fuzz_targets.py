@@ -29,9 +29,7 @@ if str(REPO) not in sys.path:
 
 from commoncrawl_crawler_spark.operators import container as ct
 from commoncrawl_crawler_spark.operators import mediameta as md
-from commoncrawl_crawler_spark.operators import mp3layer3 as l3
 from commoncrawl_crawler_spark.operators import multimodal as mm
-from commoncrawl_crawler_spark.operators import pdfdoc as pdf
 from commoncrawl_crawler_spark.operators import videobits as vb
 from commoncrawl_crawler_spark.sources import archive as ar
 from commoncrawl_crawler_spark.sources import packfiles as pk
@@ -196,16 +194,9 @@ _target(
     _decode_mpeg_layers,
 )
 
-_target(
-    "mp3_layer3_decode",
-    lambda: [l3._l3_blob(m) for m in (1, 2, 3)],
-    l3.decode_layer3_to_pcm_q,
-)
-
-
 def _mp3si_seed(mid: int) -> bytes:
     # side-info body = everything after the 4-byte frame header
-    return l3._l3_blob(mid)[4:25]
+    return ct._mp3si_blob(mid)[4:25]
 
 
 _target(
@@ -295,20 +286,6 @@ _target(
 )
 
 
-def _aac_lc_seeds():
-    from commoncrawl_crawler_spark.operators import aacdecode as aacd
-
-    return [aacd._aac_lc_blob(m) for m in (1, 2, 3)]
-
-
-def _aac_lc_parse(blob):
-    from commoncrawl_crawler_spark.operators import aacdecode as aacd
-
-    return aacd.decode_aac_lc_stream(blob)
-
-
-_target("aac_lc", _aac_lc_seeds, _aac_lc_parse)
-
 _target(
     "audio_specific_config",
     lambda: [vb.build_audio_specific_config(2, 4, 2)],
@@ -393,37 +370,6 @@ _target(
     lambda: [vb._av1_blob(m) for m in (1, 2)],
     _parse_av1,
 )
-
-# --- documents / fonts ----------------------------------------------
-
-_target(
-    "pdf",
-    # mid%3 in _pdf_enc_blob cycles R3/RC4-128, R2/RC4-40, R4/AESV2;
-    # R6/AESV3 is deliberately slow (Algorithm 2.B) so pytest covers
-    # it and the fuzz sticks to the cheap forms
-    lambda: [pdf._pdf_blob(1), pdf._pdf_xs_blob(1),
-             pdf._pdf_enc_blob(0), pdf._pdf_enc_blob(2)],
-    pdf.parse_pdf,
-)
-
-_target(
-    "woff",
-    lambda: [pdf._woff_blob(m) for m in (1, 2)],
-    pdf.parse_woff,
-)
-
-
-def _sfnt_seed(mid: int) -> bytes:
-    return pdf.build_sfnt(
-        [
-            (b"head", pdf.build_head_table(1000 + mid, (0, -200, 800, 900))),
-            (b"name", pdf.build_name_table(f"Fam{mid}")),
-            (b"glyf", b"\x00" * (20 + mid)),
-        ]
-    )
-
-
-_target("sfnt", lambda: [_sfnt_seed(1)], pdf.parse_sfnt)
 
 # --- pack files / text manifests ------------------------------------
 
