@@ -386,6 +386,25 @@ def surt_key_expr(col: Column) -> Column:
     )
 
 
+_SURT_HOST_RE = re.compile(r"^[a-z][a-z0-9+.-]*://([^/?#:]+)")
+_SURT_PATH_RE = re.compile(r"^[a-z][a-z0-9+.-]*://[^/?#]*([^#]*)")
+
+
+def surt_key(url: str) -> str:
+    """`surt_key_expr` for one URL on the driver: the same regexes
+    and steps, so a point lookup keys its search without a Spark job.
+    Parity with the Column expression is pinned by
+    tests/test_cdx_langid.py::test_surt_key_matches_spark_expr."""
+    low = url.lower()
+    m = _SURT_HOST_RE.match(low)
+    host = m.group(1) if m else ""
+    if host.startswith("www."):
+        host = host[4:]
+    m = _SURT_PATH_RE.match(low)
+    path = m.group(1) if m else ""
+    return ",".join(reversed(host.split("."))) + ")" + (path or "/")
+
+
 def reverse_host_expr(col: Column) -> Column:
     """Host name -> reversed-label node name ('www.example.com' ->
     'com.example.www'), the public cc-webgraph node-naming convention

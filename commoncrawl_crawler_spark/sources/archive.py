@@ -31,6 +31,7 @@ Spark integration:
 
 from __future__ import annotations
 
+import bisect
 import gzip
 import io
 import os
@@ -41,6 +42,7 @@ from . import ranged_io
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -1075,60 +1077,78 @@ def write_cdx(idx: DataFrame, path: str, shards: int = 4) -> None:
             fh.write(f"{r['first_key']}\t{r['file']}\n")
 
 
+def _seek_line_start(fh, pos: int) -> None:
+    """Seek `fh` to the first line that starts at or after byte `pos`."""
+    fh.seek(max(pos - 1, 0))
+    if pos:
+        fh.readline()  # the rest of the line holding byte pos - 1
+
+
+def _seek_first_line(fh, key: bytes, size: int) -> None:
+    """Seek a sorted CDX shard to its first line whose urlkey is >=
+    `key` (to the end if none): a bisection over byte offsets, each
+    probe reading the first whole line that starts at or after it."""
+    lo, hi = 0, size
+    while lo < hi:
+        mid = (lo + hi) // 2
+        _seek_line_start(fh, mid)
+        line = fh.readline()
+        if not line or line.split(b" ", 1)[0] >= key:
+            hi = mid
+        else:
+            lo = mid + 1
+    _seek_line_start(fh, lo)
+
+
 def cdx_lookup(spark: SparkSession, path: str, url: str) -> DataFrame:
-    """Point lookup against a write_cdx layout: consult cluster.idx
-    (driver-side, one tiny file) for the shard(s) whose key range can
-    contain the URL's SURT key, then scan ONLY those -- the
-    reference's TFile/HDFSFileIndex seek discipline re-expressed as
-    file-level pruning. Returns the matching captures as parsed rows.
+    """Point lookup against a write_cdx layout, served on the driver:
+    bisect `cluster.idx` for the shard whose key range can contain the
+    URL's SURT key, bisect that sorted shard file by byte offset, and
+    read only the matching lines -- the reference's TFile/HDFSFileIndex
+    seek. Returns the captures (urlkey, timestamp, meta_json) in
+    timestamp order as a DataFrame over local rows: the lookup plans
+    no Spark scan and runs no Spark job, and neither does collecting
+    the result.
 
     A multi-capture urlkey can STRADDLE a range boundary (the range
     partitioner splits on (urlkey, timestamp)); per the zipnum
     convention, when a candidate shard's first urlkey EQUALS the
-    search key the preceding shard is scanned too, walking back
-    while that holds."""
+    search key the preceding shard is read too, walking back while
+    that holds. Shard lines ascend by (urlkey, timestamp) across the
+    walked shards, so the captures come out in timestamp order. A key
+    that sorts before every shard opens no shard file."""
     from ..functions import urls as urlfn
 
-    # the SURT key comes from the SAME Column expression write_cdx
-    # keyed with (a one-row job), so writer and reader can never
-    # desynchronize on canonicalization rules
-    key = (
-        spark.range(1)
-        .select(urlfn.surt_key_expr(F.lit(url)).alias("k"))
-        .first()["k"]
-    )
-
-    entries: list[tuple[str, str]] = []  # (first_urlkey, file)
+    key = urlfn.surt_key(url)
+    firsts: list[str] = []  # each shard's first urlkey
+    files: list[str] = []
     with open(os.path.join(path, "cluster.idx"), encoding="utf-8") as fh:
         for ln in fh:
             first_key, fname = ln.rstrip("\n").split("\t")
-            entries.append((first_key.split(" ")[0], fname))
-    i = -1
-    for j, (first_urlkey, _) in enumerate(entries):
-        if first_urlkey <= key:
-            i = j  # last shard starting at-or-before key
-        else:
-            break
-    if i == -1:
-        i = 0  # key sorts before every shard: only shard 0 can match
-    lo = i
-    while lo > 0 and entries[lo][0] == key:
+            firsts.append(first_key.split(" ")[0])
+            files.append(fname)
+    hi = bisect.bisect_right(firsts, key) - 1  # last shard starting <= key
+    lo = hi
+    while lo > 0 and firsts[lo] == key:
         lo -= 1  # earlier captures of the same key end the prior shard
-    files = [
-        os.path.join(path, fname) for _, fname in entries[lo : i + 1]
-    ]
-    if not files:  # empty layout
-        return spark.createDataFrame(
-            [], "urlkey string, timestamp string, meta_json string"
-        )
-    rows = spark.read.text(files)
-    parts = F.split(F.col("value"), " ", 3)
-    parsed = rows.select(
-        F.get(parts, 0).alias("urlkey"),
-        F.get(parts, 1).alias("timestamp"),
-        F.get(parts, 2).alias("meta_json"),
+    bkey = key.encode("utf-8")
+    cols: list[list[str]] = [[], [], []]
+    for fname in files[max(lo, 0) : hi + 1]:
+        shard = os.path.join(path, fname)
+        with open(shard, "rb") as fh:
+            _seek_first_line(fh, bkey, os.path.getsize(shard))
+            for line in fh:
+                parts = line.rstrip(b"\n").decode("utf-8").split(" ", 2)
+                if parts[0] != key:
+                    break
+                for col, v in zip(cols, parts):
+                    col.append(v)
+    # an Arrow table, even an empty one, becomes a local relation:
+    # no job, where a list (or an empty pandas frame) would run one
+    names = ("urlkey", "timestamp", "meta_json")
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
     )
-    return parsed.filter(F.col("urlkey") == key).orderBy("timestamp")
 
 
 # ---------------------------------------------------------------------------

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import glob
+import os
 import zlib
 
 import pyspark.sql.functions as F
@@ -223,15 +224,31 @@ def test_write_cdx_shards_sorted_with_cluster_idx(spark, tmp_path):
     assert len(all_keys) == 40
 
 
-def test_cdx_lookup_finds_capture_and_prunes_to_one_shard(spark, tmp_path):
+def _count_shard_opens(monkeypatch) -> list[str]:
+    """Record every CDX shard file `archive` opens from now on."""
+    opened: list[str] = []
+
+    def counting_open(file, *args, **kwargs):
+        if os.path.basename(str(file)).startswith("cdx-"):
+            opened.append(str(file))
+        return open(file, *args, **kwargs)
+
+    monkeypatch.setattr(archive, "open", counting_open, raising=False)
+    return opened
+
+
+def test_cdx_lookup_finds_capture_and_prunes_to_one_shard(
+    spark, tmp_path, monkeypatch
+):
     archive.write_cdx(_demo_index(spark), str(tmp_path), shards=4)
+    opened = _count_shard_opens(monkeypatch)
     hit = archive.cdx_lookup(spark, str(tmp_path), "http://h17.com/doc/17")
     rows = hit.collect()
     assert len(rows) == 1
     assert rows[0]["urlkey"] == "com,h17)/doc/17"
     assert '"offset":1700' in rows[0]["meta_json"]
-    # the plan reads exactly ONE shard file
-    assert len(hit.inputFiles()) == 1
+    # the lookup reads exactly ONE shard file
+    assert len(opened) == 1
 
 
 def test_cdx_lookup_key_before_first_shard_returns_empty(spark, tmp_path):
@@ -240,10 +257,8 @@ def test_cdx_lookup_key_before_first_shard_returns_empty(spark, tmp_path):
     assert miss.count() == 0
 
 
-def test_cdx_lookup_collects_captures_straddling_shards(spark, tmp_path):
-    # one urlkey with 20 captures among 4 shards: the range
-    # partitioner splits on (urlkey, timestamp), so the captures can
-    # straddle shard boundaries; lookup must walk back and return all
+def _straddle_index(spark):
+    """One urlkey with 20 captures between two single-capture keys."""
     rows = [
         (
             "com,hot)/x",
@@ -269,17 +284,134 @@ def test_cdx_lookup_collects_captures_straddling_shards(spark, tmp_path):
         )
         for side in ("aaa", "zzz")
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "urlkey string, timestamp string, original string, mime string,"
         " digest string, length long, offset long, filename string",
     )
-    archive.write_cdx(df, str(tmp_path), shards=4)
+
+
+def test_cdx_lookup_collects_captures_straddling_shards(spark, tmp_path):
+    # one urlkey with 20 captures among 4 shards: the range
+    # partitioner splits on (urlkey, timestamp), so the captures can
+    # straddle shard boundaries; lookup must walk back and return all
+    archive.write_cdx(_straddle_index(spark), str(tmp_path), shards=4)
     hit = archive.cdx_lookup(spark, str(tmp_path), "http://hot.com/x")
     got = hit.collect()
     assert len(got) == 20
     ts = [r["timestamp"] for r in got]
     assert ts == sorted(ts)
+
+
+def _spark_scan_lookups(spark, path, urls):
+    """url -> its captures, found the Spark way: read.text over every
+    shard of a write_cdx layout, keyed by surt_key_expr, filtered to
+    the URL's key and sorted."""
+    parts = F.split(F.col("value"), " ", 3)
+    lines = spark.read.text(glob.glob(os.path.join(path, "cdx-*.txt"))).select(
+        F.get(parts, 0).alias("urlkey"),
+        F.get(parts, 1).alias("timestamp"),
+        F.get(parts, 2).alias("meta_json"),
+    )
+    keys = spark.createDataFrame([(u,) for u in urls], "url string").select(
+        "url", urlfn.surt_key_expr(F.col("url")).alias("urlkey")
+    )
+    got = {u: [] for u in urls}
+    for r in (
+        keys.join(lines, "urlkey")
+        .orderBy("url", "timestamp", "meta_json")
+        .collect()
+    ):
+        got[r["url"]].append((r["urlkey"], r["timestamp"], r["meta_json"]))
+    return got
+
+
+def _generated_segment_urls(tmp_path, pages=60):
+    from perfbench import gen
+
+    man = gen.Generator(7, pages=pages, files=2, hosts=25).build(str(tmp_path))
+    return os.path.join(str(tmp_path), "segment"), [
+        p.url for p in man.pages.values()
+    ]
+
+
+_SURT_EDGE_URLS = [
+    "HTTP://WWW.EXAMPLE.COM/A/B?X=Y",
+    "http://www.example.com",
+    "http://www.www.example.com/",
+    "http://example.com?q=1",
+    "http://example.com/path?a=1&b=2",
+    "http://example.com/a#frag",
+    "http://example.com#frag",
+    "http://example.com/a?b=1#c",
+    "http://example.com:8080/x",
+    "https://www.example.com:443",
+    "http://example.com./trailing",
+    "http://user@example.com/",
+    "ftp://files.example.org/pub",
+    "http://www.Bücher.DE/Straße",
+    "http://ΠΑΡΑΔΕΙΓΜΑ.ΔΟΚΙΜΗ/ΣΟΦΟΣ",
+    "http://İstanbul.example.tr/",
+    "http://例子.测试/路径?查询=1",
+    "http://xn--bcher-kva.de/",
+    "example.com/no-scheme",
+    "",
+]
+
+
+def test_surt_key_matches_spark_expr(spark, tmp_path):
+    """The driver-side surt_key equals the Column expression write_cdx
+    keys with, on every URL of a generated segment and on edge cases."""
+    _, urls = _generated_segment_urls(tmp_path)
+    urls += _SURT_EDGE_URLS
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    want = [
+        r[0] for r in df.select(urlfn.surt_key_expr(F.col("url"))).collect()
+    ]
+    assert [urlfn.surt_key(u) for u in urls] == want
+
+
+def test_cdx_driver_lookup_matches_spark_scan(spark, tmp_path):
+    """Every URL of a generated segment, and the straddling-shard
+    layout: the driver lookup returns exactly the rows a Spark scan,
+    filter and sort of the same shards returns."""
+    seg, urls = _generated_segment_urls(tmp_path / "in")
+    layout = str(tmp_path / "cdx")
+    archive.write_cdx(
+        archive.cdx_index(archive.read_warc(spark, seg)), layout, shards=4
+    )
+    straddle = tmp_path / "straddle"
+    archive.write_cdx(_straddle_index(spark), str(straddle), shards=4)
+    hot_shards = [
+        f for f in straddle.glob("cdx-*.txt") if "com,hot)/x " in f.read_text()
+    ]
+    assert len(hot_shards) >= 2  # the case under test: the key straddles
+    for path, lookups in (
+        (layout, urls + ["http://absent.example/"]),
+        (str(straddle), ["http://hot.com/x", "http://aaa.com/y",
+                         "http://zzz.com/y", "http://mid.com/"]),
+    ):
+        want = _spark_scan_lookups(spark, path, lookups)
+        assert sum(map(bool, want.values())) == len(lookups) - 1
+        for u in lookups:
+            got = [tuple(r) for r in archive.cdx_lookup(spark, path, u).collect()]
+            assert got == want[u], u
+
+
+def test_cdx_lookup_runs_no_spark_job(spark, tmp_path, count_jobs):
+    archive.write_cdx(_demo_index(spark), str(tmp_path), shards=4)
+    for url, n in (
+        ("http://h17.com/doc/17", 1),  # a capture
+        ("http://h17.com/doc/18", 0),  # inside a shard's range, absent
+        ("http://aaa.aa/x", 0),  # before the first shard
+    ):
+        rows = []
+        jobs = count_jobs(
+            lambda: rows.extend(
+                archive.cdx_lookup(spark, str(tmp_path), url).collect()
+            )
+        )
+        assert (jobs, len(rows)) == (0, n), url
 
 
 def test_fetch_plan_ranges_read_back_as_whole_member_runs(spark, tmp_path):

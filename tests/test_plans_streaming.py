@@ -36,9 +36,7 @@ def test_query_cache_written_once_and_reused(spark, tmp_path, sf_smoke):
         sort_field="doc_count", ascending=False, page_size=3, tiebreak="domain"
     )
     qid = query_api.canonical_query_id(
-        "domain_list",
-        {"pattern": "^src.*", "sort": "doc_count", "asc": False,
-         "tiebreak": "domain"},
+        _domains(spark, sf_smoke), "domain_list", {"pattern": "^src.*"}, info
     )
     assert not server.cached_results_available(qid)
     first = server.domain_list_query(_domains(spark, sf_smoke), "^src.*", info)
@@ -72,9 +70,7 @@ def test_query_cache_hits_on_non_os_path_uri(spark, tmp_path, sf_smoke):
         tiebreak="domain",
     )
     qid = query_api.canonical_query_id(
-        "domain_list",
-        {"pattern": "^src.*", "sort": "doc_count", "asc": False,
-         "tiebreak": "domain"},
+        _domains(spark, sf_smoke), "domain_list", {"pattern": "^src.*"}, info
     )
     assert not server.cached_results_available(qid)
     server.domain_list_query(
