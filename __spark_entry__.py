@@ -34,9 +34,7 @@ from commoncrawl_crawler_spark.operators import (
     joins,
     corpus,
     layout,
-    mediameta,
     multimodal,
-    videobits,
     robots,
     sampling,
     sessions,
@@ -4389,19 +4387,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-8: the WebVTT twin -- magic + header metadata block,
         # named cue ids, cue settings after the end timestamp, short
         # MM:SS.mmm timestamps; identical cue timing closed forms
-        # round-8: Opus TOC census (RFC 6716 3.1) one layer below the
-        # Ogg pages: per-packet config/stereo/code decode, frame
-        # counts, exact tenth-ms durations, 120 ms legality check
-        # round-8: FLAC frame-level census below the metadata blocks --
-        # CRC-8-validated sync scan (frames carry no length field, so
-        # scan+checksum IS the honest walk), coded block-size/rate/
-        # depth tables, extended-UTF-8 frame numbers
-        "mm_flac_frames": lambda s, d: mediameta.flac_frame_stats(
-            mediameta.synthesize_flac_frames(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        "mm_opus_toc": lambda s, d: mediameta.opus_toc_stats(
-            mediameta.synthesize_opus(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
         "source_vtt_cues": lambda s, d: packfiles.subtitle_stats(
             packfiles.synthesize_webvtt(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
@@ -4461,49 +4446,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_mp2_decode": lambda s, d: container.decode_layer2(
             container.synthesize_layer2(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id"),
-        # AAC/ADTS transport walk (ISO 14496-3 1.A.2.2): real frame
-        # headers, published sampling-frequency table, exact sample
-        # accounting -- the audio-routing profile of a corpus scan
-        "mm_adts_frames": lambda s, d: videobits.adts_frame_stats(
-            videobits.synthesize_adts(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-8: one layer below ADTS framing -- raw_data_block
-        # element walk (PCE channel map, DSE/FIL metadata census,
-        # first audio element id) + derived AudioSpecificConfig.
-        "mm_aac_elements": lambda s, d: videobits.aac_element_stats(
-            videobits.synthesize_aac_elements(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # H.264 Annex-B NAL walk + REAL SPS decode (Exp-Golomb,
-        # emulation-prevention unescape, cropping arithmetic): the
-        # actual pixel resolution of every stream, no codec needed
-        "mm_h264_sps": lambda s, d: videobits.h264_stream_stats(
-            videobits.synthesize_h264(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # FLAC STREAMINFO (xiph spec): metadata-block walk, 20-bit
-        # rate / 36-bit sample-count bit layout, exact duration basis
-        "mm_flac_streaminfo": lambda s, d: mediameta.flac_streaminfo(
-            mediameta.synthesize_flac(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # Ogg page walk (RFC 3533) + Vorbis/Opus identification
-        # headers: codec routing, final-granule duration, EOS check
-        "mm_ogg_packets": lambda s, d: mediameta.ogg_stream_stats(
-            mediameta.synthesize_ogg(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # WebP RIFF walk: real dimension decode for all three
-        # variants (VP8 lossy / VP8L lossless / VP8X extended)
-        "mm_webp_dims": lambda s, d: mediameta.webp_dimensions(
-            mediameta.synthesize_webp(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # Matroska/EBML vint walk (RFC 8794) to the WebM track
-        # census: codec ids, pixel dims, audio rate/channels
-        "mm_webm_tracks": lambda s, d: mediameta.webm_track_census(
-            mediameta.synthesize_webm(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id", "track_number"),
-        # HEIF/AVIF (ISO 23008-12 over BMFF): ftyp brand + the meta
-        # box's pitm/iinf/iprp walk to the ispe pixel dimensions
-        "mm_heif_dims": lambda s, d: mediameta.heif_dimensions(
-            mediameta.synthesize_heif(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
         # ID3v2.3 text-frame walk inside valid MP3s: the
         # artist/title/album routing columns of an audio corpus
         "mm_id3_tags": lambda s, d: container.id3_text_frames(
@@ -4515,18 +4457,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_mp3_sideinfo": lambda s, d: container.mp3_sideinfo(
             container.synthesize_mp3_sideinfo(_t(s, d, "documents"))
         ).transform(_share_sort).orderBy("media_id", "frame_idx", "granule"),
-        # AV1 OBU walk (AOM spec 5.3): leb128 sizes, header bit
-        # layout, real sequence-header resolution decode
-        "mm_av1_obus": lambda s, d: videobits.av1_stream_stats(
-            videobits.synthesize_av1(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
-        # round-8: REAL PPS + slice-header parses (spec 7.3.2.2/7.3.3)
-        # -- picture/GOP census, IDR segmentation, I/P slice tally,
-        # entropy mode: the frame-level profiling a video corpus
-        # shards by, without macroblock decode
-        "mm_h264_slices": lambda s, d: videobits.h264_slice_stats(
-            videobits.synthesize_h264_slices(_t(s, d, "documents"))
-        ).transform(_share_sort).orderBy("media_id"),
         # consistent-hash ring (Karger 1997): the elastic upgrade of
         # the reference's modulo host-sharding; ring broadcast, one
         # min_by per distinct key
@@ -7182,68 +7112,6 @@ def oracle_sql() -> dict[str, str]:
                        AS first_text
             FROM p ORDER BY media_id
         """,
-        "mm_flac_frames": """
-            -- closed forms of _flac_frames_params(mid):
-            --   n = 2 + mid%5 frames, block = 256 << (mid%8),
-            --   rate = [8000,16000,44100,48000][mid%4],
-            --   ch_bits = [0,1,8,9,10][mid%5] (mono / indep stereo /
-            --     left-side / right-side / mid-side; decorrelated
-            --     modes 8-10 are 2-channel), depth = [16,24,8][mid%3],
-            --   frame numbers 0..n-1
-            SELECT doc_id AS media_id,
-                   CAST(2 + doc_id % 5 AS INT) AS n_frames,
-                   CAST(256 * (1 << (doc_id % 8)) AS INT) AS block_size,
-                   CAST([8000,16000,44100,48000][doc_id % 4 + 1]
-                        AS INT) AS frame_rate_hz,
-                   CAST(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 2 END
-                        AS INT) AS channels,
-                   CAST([16,24,8][doc_id % 3 + 1] AS INT) AS bit_depth,
-                   CAST((2 + doc_id % 5) * 256 * (1 << (doc_id % 8))
-                        AS BIGINT) AS total_samples,
-                   CAST(1 + doc_id % 5 AS BIGINT) AS max_number,
-                   CAST(CASE WHEN doc_id % 5 >= 2
-                             THEN 2 + doc_id % 5 ELSE 0 END
-                        AS INT) AS n_decorr_frames
-            FROM documents ORDER BY media_id
-        """,
-        "mm_opus_toc": """
-            -- closed forms of _opus_packet(mid, p), p < 3 + mid%5:
-            --   code = (mid+p)%4; stereo = (mid+p)%2;
-            --   code 3 -> config 18 (CELT 10 ms), 1+(mid+p)%5 frames,
-            --     vbr = p%2; else config (mid+p)%32, 1 or 2 frames,
-            --     vbr = (code = 2)
-            WITH pk AS (
-                SELECT doc_id, p.p,
-                       (doc_id + p.p) % 4 AS code,
-                       (doc_id + p.p) % 2 AS stereo,
-                       CASE WHEN (doc_id + p.p) % 4 = 3 THEN 18
-                            ELSE (doc_id + p.p) % 32 END AS config,
-                       CASE WHEN (doc_id + p.p) % 4 = 3
-                            THEN 1 + (doc_id + p.p) % 5
-                            WHEN (doc_id + p.p) % 4 = 0 THEN 1
-                            ELSE 2 END AS frames,
-                       CASE WHEN (doc_id + p.p) % 4 = 3 THEN p.p % 2
-                            WHEN (doc_id + p.p) % 4 = 2 THEN 1
-                            ELSE 0 END AS vbr
-                FROM documents, (SELECT unnest(range(0, 8)) AS p) p
-                WHERE p.p < 3 + doc_id % 5
-            ), d2 AS (
-                SELECT pk.*, CASE
-                    WHEN config < 12
-                        THEN [100,200,400,600][config % 4 + 1]
-                    WHEN config < 16 THEN [100,200][config % 2 + 1]
-                    ELSE [25,50,100,200][config % 4 + 1]
-                END AS dur FROM pk
-            )
-            SELECT doc_id AS media_id,
-                   CAST(COUNT(*) AS INT) AS n_packets,
-                   CAST(SUM(frames) AS BIGINT) AS n_frames,
-                   CAST(SUM(frames * dur) AS BIGINT) AS total_dur_x10,
-                   CAST(SUM(stereo) AS INT) AS n_stereo,
-                   CAST(SUM(vbr) AS INT) AS n_vbr,
-                   CAST(MAX(config) AS INT) AS max_config
-            FROM d2 GROUP BY doc_id ORDER BY media_id
-        """,
         "source_vtt_cues": """
             -- identical timing closed forms to source_srt_cues: the
             -- WebVTT grammar differs, the cue content does not
@@ -7477,114 +7345,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents d LEFT JOIN vals v ON v.doc_id = d.doc_id
             GROUP BY d.doc_id ORDER BY media_id
         """,
-        # ADTS closed form: per-frame lengths/profiles/rates from the
-        # synthesis parameters; profile_mask via bit_or of 1<<profile
-        "mm_adts_frames": """
-            WITH f AS (
-                SELECT doc_id, ff.f,
-                       57 + (doc_id + ff.f) % 37 AS flen,
-                       (doc_id + ff.f) % 4 AS profile,
-                       [96000,88200,64000,48000,44100,32000,24000,
-                        22050,16000,12000,11025,8000,7350]
-                           [(doc_id + ff.f) % 13 + 1] AS sr
-                FROM documents,
-                     (SELECT unnest(range(0, 7)) AS f) ff
-                WHERE ff.f < 3 + doc_id % 4
-            )
-            SELECT doc_id AS media_id,
-                   CAST(3 + doc_id % 4 AS INT) AS n_frames,
-                   CAST(SUM(flen) AS BIGINT) AS total_bytes,
-                   CAST(1024 * (3 + doc_id % 4) AS BIGINT)
-                       AS total_samples,
-                   CAST(MIN(sr) AS INT) AS sr_min,
-                   CAST(MAX(sr) AS INT) AS sr_max,
-                   CAST(bit_or(1 << profile) AS INT) AS profile_mask,
-                   CAST(1 + doc_id % 2 AS INT) AS max_channels
-            FROM f GROUP BY doc_id ORDER BY media_id
-        """,
-        # H.264 closed form: NAL census and the SPS size arithmetic
-        # (CropUnitX=CropUnitY=2 at 4:2:0 frame coding)
-        "mm_h264_sps": """
-            SELECT doc_id AS media_id,
-                   CAST(4 + doc_id % 3 AS INT) AS n_nals,
-                   CAST(2 + doc_id % 3 AS INT) AS n_slices,
-                   CAST(1 AS INT) AS n_idr,
-                   CAST(66 AS INT) AS profile_idc,
-                   CAST(30 AS INT) AS level_idc,
-                   CAST((4 + doc_id % 9) * 16 - 2 * (doc_id % 2) AS INT)
-                       AS width,
-                   CAST((3 + doc_id % 7) * 16 - 2 * ((doc_id // 2) % 2)
-                        AS INT) AS height
-            FROM documents ORDER BY media_id
-        """,
-        # closed forms of the mediameta synthesis parameters
-        "mm_flac_streaminfo": """
-            SELECT doc_id AS media_id,
-                   CAST([8000,16000,22050,24000,32000,44100,48000,
-                         96000][doc_id % 8 + 1] AS INT) AS sample_rate,
-                   CAST(1 + doc_id % 2 AS INT) AS channels,
-                   CAST([8,16,24][doc_id % 3 + 1] AS INT)
-                       AS bits_per_sample,
-                   CAST(100000 + doc_id * 977 AS BIGINT)
-                       AS total_samples,
-                   CAST((100000 + doc_id * 977) * 1000
-                        // [8000,16000,22050,24000,32000,44100,48000,
-                            96000][doc_id % 8 + 1] AS BIGINT)
-                       AS duration_ms,
-                   CAST(2 AS INT) AS n_blocks
-            FROM documents ORDER BY media_id
-        """,
-        "mm_ogg_packets": """
-            SELECT doc_id AS media_id,
-                   CASE WHEN doc_id % 2 = 0 THEN 'vorbis'
-                        ELSE 'opus' END AS codec,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 2
-                        ELSE 1 + (doc_id // 2) % 2 END AS INT)
-                       AS channels,
-                   CAST(CASE WHEN doc_id % 2 = 0
-                        THEN [44100,48000,32000][doc_id % 3 + 1]
-                        ELSE 48000 END AS INT) AS rate,
-                   CAST(3 + doc_id % 4 AS INT) AS n_pages,
-                   CAST((2 + doc_id % 4) * 960 AS BIGINT)
-                       AS last_granule,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 32 ELSE 19 END
-                        + (2 + doc_id % 4) * 200
-                        + 60 * (1 + doc_id % 4) * (2 + doc_id % 4) // 2
-                        AS BIGINT) AS payload_bytes,
-                   CAST(1 AS INT) AS eos_seen
-            FROM documents ORDER BY media_id
-        """,
-        "mm_webp_dims": """
-            SELECT doc_id AS media_id,
-                   ['lossy','lossless','extended'][doc_id % 3 + 1]
-                       AS format,
-                   CAST(16 + (doc_id * 37) % 1200 AS INT) AS width,
-                   CAST(16 + (doc_id * 53) % 900 AS INT) AS height,
-                   CAST((16 + (doc_id * 37) % 1200)
-                        * (16 + (doc_id * 53) % 900) AS BIGINT)
-                       AS pixels
-            FROM documents ORDER BY media_id
-        """,
-        "mm_webm_tracks": """
-            SELECT doc_id AS media_id, CAST(1 AS INT) AS track_number,
-                   CAST(1 AS INT) AS track_type,
-                   CASE WHEN doc_id % 2 = 1 THEN 'V_VP9'
-                        ELSE 'V_VP8' END AS codec,
-                   CAST(320 + 16 * (doc_id % 50) AS INT) AS width,
-                   CAST(240 + 16 * (doc_id % 30) AS INT) AS height,
-                   CAST(0 AS INT) AS rate, CAST(0 AS INT) AS channels
-            FROM documents
-            UNION ALL
-            SELECT doc_id, CAST(2 AS INT), CAST(2 AS INT),
-                   CASE WHEN doc_id % 2 = 1 THEN 'A_OPUS'
-                        ELSE 'A_VORBIS' END,
-                   CAST(0 AS INT), CAST(0 AS INT),
-                   CAST(CASE WHEN doc_id % 2 = 1 THEN 48000
-                        ELSE 44100 END AS INT),
-                   CAST(1 + doc_id % 2 AS INT)
-            FROM documents WHERE doc_id % 3 <> 0
-            ORDER BY media_id, track_number
-        """,
         "mm_id3_tags": """
             SELECT doc_id AS media_id, 'TALB' AS frame_id,
                    'album-' || CAST(doc_id % 11 AS VARCHAR) AS text
@@ -7627,104 +7387,6 @@ def oracle_sql() -> dict[str, str]:
                              ELSE 0 END AS INT) AS block_type,
                    CAST((doc_id + g) % 2 AS INT) AS preflag
             FROM g ORDER BY media_id, frame_idx, granule
-        """,
-        # AV1 closed form: OBU census + sequence-header params;
-        # frame_bytes = sum of the synthesized frame payload lengths
-        "mm_av1_obus": """
-            WITH f AS (
-                SELECT doc_id, ff.f, 40 + 11 * ff.f AS fb
-                FROM documents,
-                     (SELECT unnest(range(0, 4)) AS f) ff
-                WHERE ff.f < 1 + doc_id % 4
-            )
-            SELECT doc_id AS media_id,
-                   CAST(3 + doc_id % 4 AS INT) AS n_obus,
-                   CAST(1 + doc_id % 4 AS INT) AS n_frames,
-                   CAST(doc_id % 3 AS INT) AS profile,
-                   CAST([5,8,9,12][doc_id % 4 + 1] AS INT) AS level,
-                   CAST(320 + 4 * (doc_id % 400) AS INT) AS width,
-                   CAST(180 + 2 * (doc_id % 450) AS INT) AS height,
-                   CAST(SUM(fb) AS BIGINT) AS frame_bytes
-            FROM f GROUP BY doc_id ORDER BY media_id
-        """,
-        "mm_aac_elements": """
-            -- closed forms of _aac_elements_params(mid):
-            --   n_frames = 2 + mid % 3, profile = mid % 4,
-            --   n_dse/frame = mid % 3, n_fil/frame = (mid+1) % 2,
-            --   CPE vs SCE = mid % 2; PCE leads frame 0 only;
-            --   dse payload d = 3 + (mid+d) % 5 bytes,
-            --   fil payload x = 1 + (mid+x) % 7 bytes
-            WITH p AS (
-                SELECT doc_id,
-                       2 + doc_id % 3 AS nf,
-                       doc_id % 3 AS ndse,
-                       (doc_id + 1) % 2 AS nfil,
-                       doc_id % 2 AS cpe
-                FROM documents
-            ), dseb AS (
-                SELECT p.doc_id,
-                       COALESCE(SUM(3 + (p.doc_id + d.d) % 5), 0) AS b
-                FROM p LEFT JOIN (SELECT unnest(range(0, 2)) AS d) d
-                       ON d.d < p.ndse
-                GROUP BY p.doc_id
-            ), filb AS (
-                SELECT p.doc_id,
-                       COALESCE(SUM(1 + (p.doc_id + x.x) % 7), 0) AS b
-                FROM p LEFT JOIN (SELECT unnest(range(0, 1)) AS x) x
-                       ON x.x < p.nfil
-                GROUP BY p.doc_id
-            )
-            SELECT p.doc_id AS media_id,
-                   CAST(p.nf AS INT) AS n_frames,
-                   CAST(p.doc_id % 4 + 1 AS INT) AS object_type,
-                   CAST(1024 AS INT) AS frame_length,
-                   CAST(1 + p.cpe AS INT) AS pce_channels,
-                   CAST(p.nf * p.ndse AS INT) AS n_dse,
-                   CAST(p.nf * p.nfil AS INT) AS n_fil,
-                   CAST(p.nf * dseb.b AS BIGINT) AS dse_bytes,
-                   CAST(p.nf * filb.b AS BIGINT) AS fil_bytes,
-                   CAST(p.cpe AS INT) AS first_audio
-            FROM p
-            JOIN dseb ON dseb.doc_id = p.doc_id
-            JOIN filb ON filb.doc_id = p.doc_id
-            ORDER BY media_id
-        """,
-        "mm_h264_slices": """
-            -- closed forms of _h264_slices_params(mid):
-            --   n_frames = 3 + mid % 5, spf = 1 + mid % 3,
-            --   gop = 2 + mid % 3, cabac = mid % 2;
-            -- IDR at frame % gop == 0 (frame_num resets there),
-            -- I-slices only in IDR pictures, one picture per
-            -- first_mb_in_slice == 0
-            WITH p AS (
-                SELECT doc_id,
-                       3 + doc_id % 5 AS nf,
-                       1 + doc_id % 3 AS spf,
-                       2 + doc_id % 3 AS gop,
-                       doc_id % 2 AS cab
-                FROM documents
-            )
-            SELECT doc_id AS media_id,
-                   CAST(2 + nf * spf AS INT) AS n_nals,
-                   CAST(nf AS INT) AS n_pictures,
-                   CAST((nf + gop - 1) // gop AS INT) AS n_idr_pictures,
-                   CAST(((nf + gop - 1) // gop) * spf AS INT)
-                       AS n_i_slices,
-                   CAST((nf - (nf + gop - 1) // gop) * spf AS INT)
-                       AS n_p_slices,
-                   CAST(least(gop, nf) - 1 AS INT) AS max_frame_num,
-                   CAST(cab AS INT) AS cabac
-            FROM p ORDER BY media_id
-        """,
-        "mm_heif_dims": """
-            SELECT doc_id AS media_id,
-                   ['heic','avif','mif1'][doc_id % 3 + 1] AS brand,
-                   CAST(1 + doc_id % 3 AS INT) AS n_items,
-                   CAST(1 AS INT) AS primary_item,
-                   CAST(64 + 2 * (doc_id % 960) AS INT) AS width,
-                   CAST(64 + 2 * (doc_id % 540) AS INT) AS height,
-                   CAST(1 + doc_id % 3 AS INT) AS n_extents
-            FROM documents ORDER BY media_id
         """,
         # Layer I synth params are closed-form per (frame f, subband
         # sb, granule g): i in [0,768) decomposes as f=i//384,

@@ -146,21 +146,6 @@ def simhash64_udf(col):
     return _simhash64_udf()(col)
 
 
-@lru_cache(maxsize=None)
-def _minhash_udf(num_hashes: int = 64, unit: str = "char"):
-    @pandas_udf("array<long>")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: minhash_signature(t, num_hashes=num_hashes, unit=unit)
-        )
-
-    return _udf
-
-
-def minhash_udf(col, num_hashes: int = 64, unit: str = "char"):
-    return _minhash_udf(num_hashes, unit)(col)
-
-
 def hamming_distance_expr(a: Column, b: Column) -> Column:
     """popcount(a XOR b) -- stays in codegen (Spark >= 3.3
     bit_count). util/SimHash.java hammingDistance capability."""

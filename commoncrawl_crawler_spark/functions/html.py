@@ -12,11 +12,10 @@ Here: TWO tiers behind one contract. The default is a regex
 extractor in an Arrow-batched pandas UDF -- the same fidelity class
 as the reference's tag scanner; regexes compile once per executor,
 not per row. extract_links_dom / extract_links_tiered_udf add a
-DOM-semantics tier (selectolax -> lxml -> stdlib html.parser, by
-availability) restoring the reference's Dapper-DOM behavior on
-malformed markup: unclosed tags, '>' in attribute values,
-script-embedded markup (differential fixtures:
-tests/test_html_dom_tier.py). Select with SPARK_GRAFT_HTML_TIER=dom.
+DOM-semantics tier (a walk over the stdlib html.parser tokenizer)
+restoring the reference's Dapper-DOM behavior on malformed markup:
+unclosed tags, '>' in attribute values, script-embedded markup
+(differential fixtures: tests/test_html_dom_tier.py). Select with SPARK_GRAFT_HTML_TIER=dom.
 
 Returns typed nested rows (array<struct>) -- the Spark-native shape
 for one-to-many parse output (reference used multi-sink
@@ -206,19 +205,6 @@ def extract_feed_items_udf(col: Column) -> Column:
 
 
 @lru_cache(maxsize=None)
-def _feed_links_udf():
-    @pandas_udf(LINKS_TYPE)
-    def _udf(content: pd.Series) -> pd.Series:
-        return content.map(extract_feed_links)
-
-    return _udf
-
-
-def extract_feed_links_udf(col: Column) -> Column:
-    return _feed_links_udf()(col)
-
-
-@lru_cache(maxsize=None)
 def _links_udf():
     @pandas_udf(LINKS_TYPE)
     def _udf(html: pd.Series) -> pd.Series:
@@ -307,12 +293,10 @@ def html_text_expr(col: Column) -> Column:
 # util/HTMLDomUtils.java), so corpus builders get DOM behavior. This
 # tier restores it behind the SAME (url, link_type, anchor) contract.
 #
-# Backend selection, by availability: selectolax (fastest C parser) ->
-# lxml -> the stdlib html.parser tokenizer (always present; tolerant,
-# handles CDATA script content, attribute quoting, and implicit tag
-# closure). Only the stdlib backend is exercised in this container --
-# the selectolax/lxml adapters are thin mappings onto the identical
-# walk and activate automatically where those wheels exist.
+# The walk runs on the stdlib html.parser tokenizer (always present;
+# tolerant of any markup, handles CDATA script content, attribute
+# quoting, and implicit tag closure), so the tier's output is the
+# same on every host.
 
 from html.parser import HTMLParser as _HTMLParser
 
@@ -373,7 +357,11 @@ class _LinkDOM(_HTMLParser):
         self._flush_anchor()  # unclosed <a> at EOF still emits
 
 
-def _dom_links_stdlib(html: str) -> list[tuple[str, str, str]]:
+def extract_links_dom(html: str | None) -> list[tuple[str, str, str]]:
+    """DOM-semantics twin of extract_links: same contract
+    (url, link_type, anchor), walked by _LinkDOM."""
+    if not html:
+        return []
     p = _LinkDOM()
     try:
         p.feed(html)
@@ -381,79 +369,6 @@ def _dom_links_stdlib(html: str) -> list[tuple[str, str, str]]:
     except Exception:
         pass  # tolerate pathological markup; keep what parsed
     return p.links
-
-
-def _dom_links_selectolax(html: str) -> list[tuple[str, str, str]]:
-    from selectolax.parser import HTMLParser as _SelectolaxParser
-
-    tree = _SelectolaxParser(html)
-    out: list[tuple[str, str, str]] = []
-    for node in tree.css("a[href]"):
-        out.append((node.attributes.get("href") or "", "a",
-                    (node.text() or "").strip()))
-    for tag in ("frame", "iframe"):
-        for node in tree.css(f"{tag}[src]"):
-            out.append((node.attributes.get("src") or "", tag, ""))
-    for node in tree.css("meta[http-equiv]"):
-        if (node.attributes.get("http-equiv") or "").lower() == "refresh":
-            m = re.search(r"url\s*=\s*([^;\s]+)",
-                          node.attributes.get("content") or "",
-                          re.IGNORECASE)
-            if m:
-                out.append((m.group(1), "meta_refresh", ""))
-    return out
-
-
-def _dom_links_lxml(html: str) -> list[tuple[str, str, str]]:
-    from lxml import html as _lxml_html
-
-    root = _lxml_html.fromstring(html)
-    out: list[tuple[str, str, str]] = []
-    for node in root.iter():
-        tag = str(node.tag).lower() if isinstance(node.tag, str) else ""
-        if tag == "a" and node.get("href"):
-            out.append((node.get("href"), "a",
-                        (node.text_content() or "").strip()))
-        elif tag in ("frame", "iframe") and node.get("src"):
-            out.append((node.get("src"), tag, ""))
-        elif tag == "meta" and (
-            (node.get("http-equiv") or "").lower() == "refresh"
-        ):
-            m = re.search(r"url\s*=\s*([^;\s]+)",
-                          node.get("content") or "", re.IGNORECASE)
-            if m:
-                out.append((m.group(1), "meta_refresh", ""))
-    return out
-
-
-def dom_backend_name() -> str:
-    """Which DOM backend extract_links_dom will use on this host."""
-    try:
-        import selectolax  # noqa: F401
-
-        return "selectolax"
-    except ImportError:
-        pass
-    try:
-        import lxml  # noqa: F401
-
-        return "lxml"
-    except ImportError:
-        pass
-    return "html.parser"
-
-
-def extract_links_dom(html: str | None) -> list[tuple[str, str, str]]:
-    """DOM-semantics twin of extract_links: same contract
-    (url, link_type, anchor), best available parser backend."""
-    if not html:
-        return []
-    backend = dom_backend_name()
-    if backend == "selectolax":
-        return _dom_links_selectolax(html)
-    if backend == "lxml":
-        return _dom_links_lxml(html)
-    return _dom_links_stdlib(html)
 
 
 @lru_cache(maxsize=None)
@@ -471,7 +386,7 @@ def extract_links_dom_udf(col: Column) -> Column:
 
 def extract_links_tiered_udf(col: Column) -> Column:
     """Tier-selected link extraction: SPARK_GRAFT_HTML_TIER=dom picks
-    the DOM backend, anything else (or unset) the regex scanner. The
+    the DOM tier, anything else (or unset) the regex scanner. The
     env var is read at PLAN BUILD time on the driver, so one pipeline
     never mixes tiers between stages."""
     import os as _os

@@ -17,8 +17,10 @@ code is copied.
 Two tiers:
 - `*_expr` Column expressions -- JVM-side, whole-stage-codegen
   friendly; the hot path for 100 TB scans.
-- `canonicalize_url` / `url_fingerprint` Python kernels wrapped as
-  pandas UDFs -- full-fidelity parsing for edge cases, Arrow-batched.
+- `canonicalize_url` / `root_domain` / `idna_host` Python kernels
+  wrapped as pandas UDFs -- full-fidelity parsing for edge cases,
+  Arrow-batched. `url_fingerprint` (the URLFPV2 key) and the Rabin
+  kernels `rabin_fp64` / `rabin_fp64_batch` are plain Python.
 """
 
 from __future__ import annotations
@@ -266,43 +268,6 @@ def _root_domain_udf():
 
 def root_domain_udf(col):
     return _root_domain_udf()(col)
-
-
-@lru_cache(maxsize=None)
-def _rabin_fp64_udf():
-    @pandas_udf("long")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return rabin_fp64_batch(texts)
-
-    return _udf
-
-
-def rabin_fp64_udf(col):
-    return _rabin_fp64_udf()(col)
-
-
-@lru_cache(maxsize=None)
-def _url_fingerprint_udf():
-    @pandas_udf("struct<domain_hash:long,url_hash:long,root_domain_hash:long>")
-    def _udf(urls: pd.Series) -> pd.DataFrame:
-        # canonicalize/parse row-wise (string munging), then fingerprint
-        # all three key strings with the batched Rabin kernel
-        canons = urls.map(canonicalize_url)
-        hosts = canons.map(lambda c: (urlsplit(c).hostname or "") if c else None)
-        roots = hosts.map(lambda h: (root_domain(h) or h) if h else None)
-        return pd.DataFrame(
-            {
-                "domain_hash": rabin_fp64_batch(hosts),
-                "url_hash": rabin_fp64_batch(canons),
-                "root_domain_hash": rabin_fp64_batch(roots),
-            }
-        )
-
-    return _udf
-
-
-def url_fingerprint_udf(col):
-    return _url_fingerprint_udf()(col)
 
 
 # ---------------------------------------------------------------------------

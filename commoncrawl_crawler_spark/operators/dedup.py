@@ -23,10 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..checkpointing import ckpt_eager, ckpt_lazy
 from ..functions import hashing
 
 
-from ..checkpointing import ckpt_eager, ckpt_lazy, stable_checkpoint
 def exact_duplicates(documents: DataFrame) -> DataFrame:
     """Exact-dup groups by content signature (MD5 over text --
     ParserMapper.java:828-832's signature, CrossDomainDupesReducer's
@@ -162,97 +162,6 @@ def simhash_candidate_pairs(
         )
         .filter(F.col("hamming") <= hamming_k)
         .distinct()
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    jaccard_threshold: float = 0.5,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs with exact token-Jaccard verify.
-
-    Sketch -> band signature slices -> bucket join -> verify with the
-    true token-set Jaccard (array_intersect/union sizes, JVM-side).
-    The sketch hashes the SAME distinct-whitespace-token unit the
-    verify measures (unit="token"), so the false-negative rate really
-    is the (bands, rows-per-band) S-curve of the thresholded Jaccard
-    -- a char-shingle sketch would gate candidates on a different
-    similarity than the one verified. False positives are harmless
-    (exact verify).
-    """
-    rows_per_band = num_hashes // bands
-    # band rows carry ONLY (doc_id, band, bucket): token arrays must
-    # not ride through the 16x explode + self-join -- they re-attach
-    # to the (far smaller) surviving candidate-pair set afterwards
-    banded = (
-        documents.select(
-            "doc_id",
-            hashing.minhash_udf(F.col("text"), num_hashes, unit="token").alias(
-                "sig"
-            ),
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.hash(
-                            F.lit(i),
-                            F.slice(
-                                F.col("sig"), i * rows_per_band + 1, rows_per_band
-                            ),
-                        ).alias("bucket")
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("bucket"),
-        )
-        # materialize once: the self-join would otherwise run the
-        # minhash UDF twice (no CSE across join branches)
-        .transform(ckpt_lazy)
-    )
-    banded = _cap_buckets(banded, ["bucket"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    toks = documents.select(
-        "doc_id",
-        F.array_distinct(F.split(F.trim(F.col("text")), r"\s+")).alias("tokens"),
-    ).transform(ckpt_lazy)
-    # |a ∪ b| = |a| + |b| - |a ∩ b| exactly (distinct sets, integer
-    # math) -- array_union would redo the intersection work per pair
-    inter = F.size(F.array_intersect(F.col("tokens_a"), F.col("tokens_b")))
-    union = F.col("n_a") + F.col("n_b") - inter
-    return (
-        pairs.join(
-            toks.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("tokens").alias("tokens_a"),
-                F.size("tokens").alias("n_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            toks.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("tokens").alias("tokens_b"),
-                F.size("tokens").alias("n_b"),
-            ),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
         .orderBy("doc_a", "doc_b")
     )
 

@@ -70,12 +70,6 @@ def host_graph(links: DataFrame, src_col: str = "src_host",
     )
 
 
-def _unreverse(col):
-    # reversed node name -> original host (label reversal is an
-    # involution)
-    return F.array_join(F.reverse(F.split(col, r"\.")), ".")
-
-
 def domain_graph(host_edges: DataFrame) -> DataFrame:
     """Host-level edges -> the domain-level web graph:
     (src_domain_rev, dst_domain_rev, n_host_pairs, n_links), where

@@ -122,7 +122,6 @@ def test_every_byte_parser_is_fuzz_covered():
 
     MODULES = [
         "operators/multimodal.py", "operators/container.py",
-        "operators/mediameta.py", "operators/videobits.py",
         "sources/packfiles.py",
         "sources/archive.py", "functions/dnswire.py",
         "functions/ricecoding.py",
@@ -133,13 +132,6 @@ def test_every_byte_parser_is_fuzz_covered():
     VIA_COMPOSITE = {
         "decode_mpeg1_layer1_frame": "mpeg_layer12_decode",
         "decode_mpeg1_layer2_frame": "mpeg_layer12_decode",
-        "parse_flac_frame_header": "flac_frames",
-        "parse_id_header": "ogg",
-        "parse_sps": "h264_stream",
-        "parse_pps": "h264_slices",
-        "parse_slice_header": "h264_slices",
-        "parse_av1_sequence_header": "av1",
-        "parse_raw_data_block_elements": "aac_elements",
         "decode_name": "dns_wire",
     }
     # direct registrations whose target name differs from the
@@ -158,14 +150,6 @@ def test_every_byte_parser_is_fuzz_covered():
         "parse_fmp4_fragments": "fmp4",
         "parse_ico_entries": "ico", "parse_id3v2_frames": "id3v2",
         "parse_mp3_sideinfo_mono": "mp3_sideinfo",
-        "parse_flac_streaminfo": "flac_streaminfo",
-        "parse_ogg_pages": "ogg", "scan_flac_frames": "flac_frames",
-        "parse_opus_toc": "opus_toc", "parse_webp": "webp",
-        "parse_webm_tracks": "webm", "parse_heif": "heif",
-        "parse_adts_frames": "adts",
-        "parse_audio_specific_config": "audio_specific_config",
-        "parse_annexb": "h264_stream",
-        "parse_av1_obus": "av1",
         "parse_tar_members": "tar", "parse_zip_members": "zip",
         "parse_response": "dns_wire",
     }

@@ -16,13 +16,6 @@ from pyspark.sql import functions as F
 from commoncrawl_crawler_spark.functions import html as htmlfn
 
 
-def test_backend_selection_reports_available_parser():
-    # in this container neither selectolax nor lxml is installed
-    assert htmlfn.dom_backend_name() in (
-        "selectolax", "lxml", "html.parser"
-    )
-
-
 def test_dom_emits_unclosed_anchor_regex_misses():
     doc = '<p><a href="http://u.example/1">dangling text'
     assert htmlfn.extract_links(doc) == []  # regex needs </a>

@@ -121,19 +121,6 @@ def test_simhash_lsh_finds_planted_near_dup(spark):
     assert (1, 3) not in found and (2, 3) not in found
 
 
-def test_minhash_lsh_pairs_high_jaccard_only(spark):
-    a = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    b = a.replace("theta", "thetaX")  # high overlap
-    c = "one two three four five six seven eight " * 4
-    docs = spark.createDataFrame(
-        [Row(doc_id=1, text=a), Row(doc_id=2, text=b), Row(doc_id=3, text=c)]
-    )
-    pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
-    found = {(r.doc_a, r.doc_b) for r in pairs}
-    assert (1, 2) in found
-    assert all(3 not in p for p in found)
-
-
 def test_connected_components_merges_match_sets(spark):
     edges = spark.createDataFrame(
         [

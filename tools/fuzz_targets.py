@@ -28,9 +28,7 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 from commoncrawl_crawler_spark.operators import container as ct
-from commoncrawl_crawler_spark.operators import mediameta as md
 from commoncrawl_crawler_spark.operators import multimodal as mm
-from commoncrawl_crawler_spark.operators import videobits as vb
 from commoncrawl_crawler_spark.sources import archive as ar
 from commoncrawl_crawler_spark.sources import packfiles as pk
 
@@ -224,151 +222,6 @@ _target(
     "id3v2",
     lambda: [ct._id3_mp3_blob(m) for m in (1, 2)],
     ct.parse_id3v2_frames,
-)
-
-# --- media metadata --------------------------------------------------
-
-_target(
-    "flac_streaminfo",
-    lambda: [md._flac_blob(m) for m in (1, 2)],
-    md.parse_flac_streaminfo,
-)
-
-_target(
-    "flac_frames",
-    lambda: [md._flac_frames_blob(m) for m in (1, 2, 3)],
-    md.scan_flac_frames,
-)
-
-
-def _parse_ogg(blob: bytes):
-    pages = md.parse_ogg_pages(blob)
-    return [md.parse_id_header(p["payload"]) for p in pages
-            if "payload" in p]
-
-
-_target(
-    "ogg",
-    lambda: [md._ogg_blob(m) for m in (1, 2)],
-    _parse_ogg,
-)
-
-_target(
-    "opus_toc",
-    lambda: [md._opus_packet(m, p) for m in (1, 2) for p in (0, 1, 2)],
-    md.parse_opus_toc,
-)
-
-_target(
-    "webp",
-    lambda: [md._webp_blob(m) for m in (1, 2, 3)],
-    md.parse_webp,
-)
-
-_target(
-    "webm",
-    lambda: [md._webm_blob(m) for m in (1, 2)],
-    md.parse_webm_tracks,
-)
-
-_target(
-    "heif",
-    lambda: [md._heif_blob(m) for m in (1, 2)],
-    md.parse_heif,
-)
-
-# --- video / AAC bitstreams -----------------------------------------
-
-_target(
-    "adts",
-    lambda: [vb._adts_blob(m) for m in (1, 2)],
-    vb.parse_adts_frames,
-)
-
-
-_target(
-    "audio_specific_config",
-    lambda: [vb.build_audio_specific_config(2, 4, 2)],
-    vb.parse_audio_specific_config,
-)
-
-
-def _parse_aac_elements(blob: bytes):
-    frames = vb.parse_adts_frames(blob)
-    out = []
-    for fr in frames:
-        payload = blob[fr["offset"] + 7 : fr["offset"] + fr["length"]]
-        out.append(vb.parse_raw_data_block_elements(payload))
-    return out
-
-
-_target(
-    "aac_elements",
-    lambda: [vb._aac_elements_blob(m) for m in (1, 2)],
-    _parse_aac_elements,
-)
-
-
-def _parse_h264_stream(blob: bytes):
-    """NAL walk + first-SPS parse -- the h264_stream_stats path
-    (that gate's streams carry stub PPSes, so it never full-parses
-    type 8)."""
-    nals = vb.parse_annexb(blob)
-    for nal in nals:
-        if nal["nal_type"] == 7:
-            s = nal["offset"] + 1
-            return vb.parse_sps(
-                vb.rbsp_unescape(blob[s : s + nal["ebsp_length"]])
-            )
-    return None
-
-
-def _parse_h264_slices(blob: bytes):
-    """NAL walk + SPS/PPS/slice-header parse -- the
-    h264_slice_stats path below the Arrow batching."""
-    nals = vb.parse_annexb(blob)
-    sps = None
-    out = []
-    for nal in nals:
-        s = nal["offset"] + 1
-        rbsp = vb.rbsp_unescape(blob[s : s + nal["ebsp_length"]])
-        t = nal["nal_type"]
-        if t == 7:
-            sps = vb.parse_sps(rbsp)
-            out.append(sps)
-        elif t == 8:
-            out.append(vb.parse_pps(rbsp))
-        elif t in (1, 5) and sps is not None:
-            out.append(vb.parse_slice_header(rbsp, sps, t))
-    return out
-
-
-_target(
-    "h264_stream",
-    lambda: [vb._h264_blob(m) for m in (1, 2)],
-    _parse_h264_stream,
-)
-
-_target(
-    "h264_slices",
-    lambda: [vb._h264_slices_blob(m) for m in (1, 2)],
-    _parse_h264_slices,
-)
-
-
-def _parse_av1(blob: bytes):
-    obus = vb.parse_av1_obus(blob)
-    out = []
-    for obu in obus:
-        if obu.get("obu_type") == 1 and "payload" in obu:
-            out.append(vb.parse_av1_sequence_header(obu["payload"]))
-    return out
-
-
-_target(
-    "av1",
-    lambda: [vb._av1_blob(m) for m in (1, 2)],
-    _parse_av1,
 )
 
 # --- pack files / text manifests ------------------------------------
