@@ -4,10 +4,11 @@ Reference capabilities re-implemented from published algorithms:
 - SimHash (Charikar 2002, "Similarity estimation techniques from
   rounding algorithms") -- the reference computes a 64-bit simhash
   over 4-char shingles (util/SimHash.java:52-134).
-- MinHash (Broder 1997, "On the resemblance and containment of
-  documents") -- the scale path for n-gram Jaccard dedupe.
 - Hamming distance = popcount(xor) -- kept as a Column expression
   (`bit_count` is JVM-side; util/SimHash.java's hammingDistance).
+
+MinHash signatures (Broder 1997) are computed in the dedup operator
+(`operators/dedup.md5_minhash_signatures`), not here.
 
 Kernels are numpy-vectorized inside Arrow-batched pandas UDFs: the
 per-row Python cost is amortized over whole record batches, the
@@ -73,60 +74,6 @@ def simhash64(text: str | None, shingle: int = SHINGLE_SIZE) -> int | None:
     votes = 2 * bits.sum(axis=0, dtype=np.int64) - len(ids)
     fp = int(((votes > 0).astype(np.uint64) << _BIT_POS).sum(dtype=np.uint64))
     return fp - (1 << 64) if fp >= (1 << 63) else fp
-
-
-_MERSENNE_P = np.uint64((1 << 61) - 1)
-
-
-@lru_cache(maxsize=None)
-def _minhash_family(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(42)  # fixed family; same across executors
-    a = rng.randint(1, 1 << 31, size=num_hashes).astype(np.uint64)
-    b = rng.randint(0, 1 << 31, size=num_hashes).astype(np.uint64)
-    return a, b
-
-
-def _token_ids(text: str) -> np.ndarray:
-    """Distinct whitespace-token hashes of one document as uint64[n]
-    (crc32 per token, then splitmix64 diffusion). Matches the token
-    unit of the exact Jaccard verify in operators/dedup.py, so a
-    MinHash over these ids estimates exactly the similarity the
-    verify thresholds."""
-    import zlib
-
-    toks = set(text.split())
-    if not toks:
-        return np.empty(0, dtype=np.uint64)
-    arr = np.fromiter(
-        (zlib.crc32(t.encode("utf-8")) for t in toks),
-        dtype=np.uint64,
-        count=len(toks),
-    )
-    return _splitmix64(arr)
-
-
-def minhash_signature(
-    text: str | None,
-    num_hashes: int = 64,
-    shingle: int = SHINGLE_SIZE,
-    unit: str = "char",
-) -> list[int] | None:
-    """MinHash signature via the (a*x+b) mod p universal-hash family
-    over vectorized shingle ids. unit="char" hashes character
-    shingles (SimHash.java's unit); unit="token" hashes distinct
-    whitespace tokens, the estimator matching a token-set Jaccard
-    verify."""
-    if text is None:
-        return None
-    ids = _token_ids(text) if unit == "token" else _shingle_ids(text, shingle)
-    if len(ids) == 0:
-        return [0] * num_hashes
-    ids = np.unique(ids) & np.uint64(0x7FFFFFFFFFFFFFFF)
-    a, b = _minhash_family(num_hashes)
-    with np.errstate(over="ignore"):
-        # (a * x + b) mod p, broadcast [num_hashes, n_shingles]
-        vals = (a[:, None] * ids[None, :] + b[:, None]) % _MERSENNE_P
-    return [int(v) for v in vals.min(axis=1)]
 
 
 # lazy UDF construction: pandas_udf resolves its DDL type against the

@@ -7,20 +7,18 @@ a Rabin fingerprint generator (util/FPGenerator.java) producing the
 URLFPV2 key (protocol.jr:54-72: domainHash, urlHash,
 rootDomainHash).
 
-This module re-implements the *capabilities* from public knowledge:
-RFC 3986 parsing via urllib, a public-suffix-style root-domain rule,
-and Rabin fingerprinting from the published algorithm (M. O. Rabin,
-"Fingerprinting by random polynomials", 1981; Broder, "Some
-applications of Rabin's fingerprinting method", 1993). No reference
-code is copied.
+This module re-implements the URL *capabilities* from public
+knowledge: RFC 3986 parsing via urllib and a public-suffix-style
+root-domain rule. No reference code is copied. No URLFPV2 generator
+is kept: where the engine needs a 64-bit URL hash it uses Spark's
+built-in `xxhash64` (operators/bloom.py).
 
 Two tiers:
 - `*_expr` Column expressions -- JVM-side, whole-stage-codegen
   friendly; the hot path for 100 TB scans.
 - `canonicalize_url` / `root_domain` / `idna_host` Python kernels
   wrapped as pandas UDFs -- full-fidelity parsing for edge cases,
-  Arrow-batched. `url_fingerprint` (the URLFPV2 key) and the Rabin
-  kernels `rabin_fp64` / `rabin_fp64_batch` are plain Python.
+  Arrow-batched.
 """
 
 from __future__ import annotations
@@ -142,97 +140,6 @@ def root_domain(host: str | None) -> str | None:
     if len(labels) <= sl:
         return host
     return ".".join(labels[-(sl + 1) :])
-
-
-# ---------------------------------------------------------------------------
-# Rabin fingerprint (public algorithm; replaces util/FPGenerator.java)
-# ---------------------------------------------------------------------------
-
-# degree-64 irreducible polynomial over GF(2); x^64 term implicit.
-# 0x000000000000001B = x^64 + x^4 + x^3 + x + 1 (a standard choice for
-# CRC-64-ECMA-style arithmetic; any irreducible degree-64 poly works
-# for fingerprint uniqueness guarantees)
-RABIN_POLY = 0x000000000000001B
-
-
-def _build_rabin_table(poly: int = RABIN_POLY) -> list[int]:
-    table = []
-    for b in range(256):
-        v = b << 56
-        for _ in range(8):
-            if v & (1 << 63):
-                v = ((v << 1) ^ poly) & 0xFFFFFFFFFFFFFFFF
-            else:
-                v = (v << 1) & 0xFFFFFFFFFFFFFFFF
-        table.append(v)
-    return table
-
-
-_RABIN_TABLE = _build_rabin_table()
-_RABIN_TABLE_NP = None  # built lazily (numpy import is at module top)
-
-
-def rabin_fp64(data: bytes | str | None) -> int | None:
-    """64-bit Rabin fingerprint of a byte string (signed int64 range,
-    matching Spark LongType)."""
-    if data is None:
-        return None
-    if isinstance(data, str):
-        data = data.encode("utf-8")
-    fp = 0
-    for byte in data:
-        fp = (((fp << 8) & 0xFFFFFFFFFFFFFFFF) ^ _RABIN_TABLE[(fp >> 56) ^ byte]) & 0xFFFFFFFFFFFFFFFF
-    # two's-complement into signed 64-bit for LongType
-    return fp - (1 << 64) if fp >= (1 << 63) else fp
-
-
-def rabin_fp64_batch(values: "pd.Series") -> "pd.Series":
-    """Vectorized Rabin fingerprint over a batch of strings.
-
-    The byte chain is inherently sequential per string, so vectorize
-    ACROSS rows instead: one table-lookup step per byte position over
-    the whole padded batch (numpy fancy-indexing), masking rows
-    shorter than the position. O(max_len) numpy passes per Arrow
-    batch replaces an O(bytes) pure-Python loop per row -- the same
-    batching discipline as the simhash/minhash kernels. Bit-identical
-    to `rabin_fp64` (property-tested)."""
-    import numpy as np
-
-    global _RABIN_TABLE_NP
-    if _RABIN_TABLE_NP is None:
-        _RABIN_TABLE_NP = np.array(_RABIN_TABLE, dtype=np.uint64)
-    raw = [
-        v.encode("utf-8") if isinstance(v, str) else v
-        for v in values.tolist()
-    ]
-    n = len(raw)
-    lens = np.array([len(b) if b is not None else 0 for b in raw])
-    valid = np.array([b is not None for b in raw])
-    maxlen = int(lens.max()) if n else 0
-    mat = np.zeros((n, maxlen), dtype=np.uint8)
-    for i, b in enumerate(raw):
-        if b:
-            mat[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-    fp = np.zeros(n, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for j in range(maxlen):
-            idx = ((fp >> np.uint64(56)) ^ mat[:, j]).astype(np.int64)
-            stepped = (fp << np.uint64(8)) ^ _RABIN_TABLE_NP[idx]
-            fp = np.where(j < lens, stepped, fp)
-    out = pd.Series(fp.astype(np.int64), dtype="Int64")
-    out[~valid] = None
-    return out
-
-
-def url_fingerprint(url: str | None) -> tuple[int, int, int] | None:
-    """URLFPV2 (protocol.jr:54-72): (domain_hash, url_hash,
-    root_domain_hash) over the canonical URL."""
-    canon = canonicalize_url(url)
-    if canon is None:
-        return None
-    host = urlsplit(canon).hostname or ""
-    root = root_domain(host) or host
-    return (rabin_fp64(host), rabin_fp64(canon), rabin_fp64(root))
 
 
 # ---------------------------------------------------------------------------

@@ -148,28 +148,6 @@ def test_root_domain(host, expected):
     assert urls.root_domain(host) == expected
 
 
-def test_rabin_fp64_deterministic_and_distinct():
-    a = urls.rabin_fp64("http://example.com/")
-    assert a == urls.rabin_fp64("http://example.com/")
-    assert a != urls.rabin_fp64("http://example.org/")
-    assert urls.rabin_fp64("") == 0
-    assert urls.rabin_fp64(None) is None
-    # signed-64 range (Spark LongType)
-    vals = [urls.rabin_fp64(f"u{i}") for i in range(200)]
-    assert all(-(1 << 63) <= v < (1 << 63) for v in vals)
-    assert len(set(vals)) == 200
-
-
-def test_url_fingerprint_struct():
-    fp = urls.url_fingerprint("https://a.b.Example.com/x?sid=1")
-    assert fp is not None
-    domain_hash, url_hash, root_hash = fp
-    # same root domain across subdomains
-    fp2 = urls.url_fingerprint("https://c.Example.com/y")
-    assert fp2[2] == root_hash
-    assert fp2[0] != domain_hash
-
-
 def test_simhash_similarity_property():
     base = "the quick brown fox jumps over the lazy dog " * 5
     near = base.replace("lazy", "lazzy")
@@ -182,17 +160,6 @@ def test_simhash_similarity_property():
     assert ham(h0, h1) < 12  # near-dup stays close
     assert ham(h0, h2) > 20  # unrelated stays far
     assert hashing.simhash64(base) == h0  # deterministic
-
-
-def test_minhash_jaccard_estimate():
-    a = "spark dataframe engine with catalyst optimizer " * 4
-    b = "spark dataframe engine with tungsten optimizer " * 4
-    c = "unrelated text about web crawling and arc files " * 4
-    sa, sb, sc = (hashing.minhash_signature(t, num_hashes=128) for t in (a, b, c))
-    sim_ab = sum(x == y for x, y in zip(sa, sb)) / 128
-    sim_ac = sum(x == y for x, y in zip(sa, sc)) / 128
-    assert sim_ab > 0.5
-    assert sim_ac < 0.2
 
 
 def test_simhash_bands_collision_property(spark):
@@ -330,22 +297,6 @@ def test_canonicalize_udf_matches_kernel(spark):
     }
     for raw in raws:
         assert got[raw] == urls.canonicalize_url(raw), raw
-
-
-def test_rabin_batch_matches_scalar():
-    import pandas as pd
-
-    vals = (
-        [f"http://example{i}.com/path/{i * 37}" for i in range(50)]
-        + ["", "x", "a" * 300, None]
-    )
-    got = urls.rabin_fp64_batch(pd.Series(vals, dtype=object))
-    for v, g in zip(vals, got.tolist()):
-        expect = urls.rabin_fp64(v)
-        if expect is None:
-            assert pd.isna(g), (v, g)
-        else:
-            assert g == expect, (v, g, expect)
 
 
 def test_contamination_check_flags_copied_benchmark_text(spark):

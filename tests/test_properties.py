@@ -68,15 +68,6 @@ def test_simhash_deterministic_int64(text):
 
 
 @SETTLE
-@given(text=st.text(min_size=1, max_size=300))
-def test_minhash_identical_texts_full_match(text):
-    a = hashing.minhash_signature(text, num_hashes=32)
-    b = hashing.minhash_signature(text, num_hashes=32)
-    assert a == b
-    assert len(a) == 32
-
-
-@SETTLE
 @given(text=st.text(min_size=4, max_size=300))
 def test_shingle_ids_count(text):
     n_bytes = len(text.encode("utf-8"))
