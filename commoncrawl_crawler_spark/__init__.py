@@ -13,6 +13,7 @@ Layout (maps SURVEY.md sections):
   functions   - scalar library: URLs, hashing/simhash, text analysis
   operators   - filters, joins, aggregates, windows, setops, dedup,
                 similarity, graph (PageRank/CC), merge, multimodal
+                (image decoders)
   plans       - interactive query API (filter/sort/paginate + cache),
                 pipeline step DAG with idempotent outputs
   streaming   - Structured Streaming: windowed stats, stream dedup

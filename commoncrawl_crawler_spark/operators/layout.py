@@ -11,9 +11,9 @@ shards, and multi-file merges that re-pack small per-job outputs
   of the dimensions touches a small, contiguous set of files (the
   data-skipping layout Delta/Iceberg OPTIMIZE ZORDER applies; Morton
   1966). Implemented as a pure Column bit-interleave (stays in
-  whole-stage codegen; no UDF), plus a writer-shaping helper that
-  range-partitions by the key so downstream parquet min/max stats
-  per file become selective.
+  whole-stage codegen; no UDF); the output's file-bucket column is
+  what a clustered writer partitions by, so downstream parquet
+  min/max stats per file become selective.
 
 * **Compaction planning** -- the small-files problem. Given a file
   listing, assign files to target-size bins with a per-table-
@@ -22,8 +22,7 @@ shards, and multi-file merges that re-pack small per-job outputs
   bin boundaries are reproducible from the listing alone so a
   planner re-run is idempotent.
 
-At 100 TB: the z-key computation is embarrassingly parallel; the
-range-partitioned write is one shuffle whose balance AQE tunes. The
+At 100 TB: the z-key computation is embarrassingly parallel. The
 compaction window partitions by table-partition prefix -- file counts
 per partition are bounded by the writer's own rotation policy, never
 corpus-sized.
@@ -79,24 +78,6 @@ def zorder_events(events: DataFrame, bits: int = 16) -> DataFrame:
         z.alias("zkey"),
         F.shiftright(z, 2 * bits - 8).cast("int").alias("file_bucket"),
     ).orderBy("event_id")
-
-
-def cluster_write_plan(
-    df: DataFrame, cols: list[str], n_files: int, bits: int = 16
-) -> DataFrame:
-    """Shape ``df`` for a clustered write: range-partition on the
-    z-key (one shuffle; AQE balances the ranges) and sort within each
-    partition so every output file covers a tight z-range -- i.e.
-    tight min/max on every clustered column. Call ``.write`` on the
-    result; this function only shapes the plan."""
-    with_key = df.withColumn(
-        "_zkey", zorder_key([F.col(c) for c in cols], bits)
-    )
-    return (
-        with_key.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )
 
 
 def compaction_plan(

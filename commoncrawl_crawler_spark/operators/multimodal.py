@@ -2,20 +2,18 @@
 
 Training-data-pipeline tier (no reference analog -- the reference
 stores raw content as `buffer` fields, protocol.jr:386 contentRaw,
-and ships it through ARC files; this module is the modern
-image/audio/video equivalent).
+and ships it through ARC files; this module is the modern image
+equivalent).
 
 Design: media is an opaque `binary` column plus a typed metadata
 struct. All heavy per-item work runs in Arrow-batched pandas
 functions (`mapInPandas`) so batches move zero-copy and the Python
 loop is vectorized where possible. Real decoders (pure numpy/stdlib)
-cover WAV/PPM/PNG/GIF/JPEG (baseline + progressive, gray + color) in
-this module and MP4 demux + MPEG-audio framing in
-operators/container.py; only compressed audio/video SAMPLE payloads
-(layer-III, AAC, H.26x) still raise NotImplementedError in
-`decode_media` unless the deterministic fake codec is requested --
-the Spark-side plumbing (schemas, batch shapes, partitioning) is
-real and tested either way.
+cover PPM/PNG/GIF/BMP/JPEG (baseline + progressive, gray + color);
+`decode_media` raises NotImplementedError for any other payload
+unless the deterministic fake codec is requested -- the Spark-side
+plumbing (schemas, batch shapes, partitioning) is real and tested
+either way.
 
 At 100 TB: binary payloads dominate shuffle size, so every operator
 here is shuffle-free (narrow mapInPandas / explode); repartition
@@ -144,34 +142,29 @@ def decode_media(media: DataFrame, codec: str = "real") -> DataFrame:
     """Decode binary payloads to dense arrays.
 
     Real decoders implemented in this module (pure numpy/stdlib, no
-    external codec libraries): `decode_wav` (RIFF/WAVE PCM),
-    `decode_ppm` (netpbm P6), `decode_png` (zlib inflate + scanline
-    unfilter), `decode_gif` (LZW + palette + interlace),
+    external codec libraries): `decode_ppm` (netpbm P6),
+    `decode_png` (zlib inflate + scanline unfilter), `decode_gif`
+    (LZW + palette + interlace),
     `decode_jpeg` / `decode_jpeg_color` (baseline T.81 gray +
     YCbCr 4:4:4/4:2:0), and `decode_jpeg_progressive` /
     `decode_jpeg_progressive_color` (SOF2 Annex-G, gray AND color:
     spectral selection, successive approximation, interleaved DC
     scans, EOBRUN, correction bits -- bit-identical to the baseline
-    decoders by differential test). Container demux is real too:
-    operators/container.py walks ISO BMFF (MP4) sample tables --
-    motion-JPEG video frames decode end-to-end through this module's
-    T.81 kernel, PCM audio tracks through numpy -- and MPEG audio
-    (MP3) framing (ID3v2 skip, bitrate/samplerate tables, VBR).
-    codec="real" here still raises for the sample payloads that
-    genuinely need external codecs (layer-III audio, AAC, H.26x --
-    wire ffmpeg into the same mapInPandas contract in production).
+    decoders by differential test), plus `decode_bmp`.
+    codec="real" here raises: audio and video payloads need codec
+    libraries (wire one into the same mapInPandas contract in
+    production).
     codec="fake16" is the deterministic stand-in: a 16-bin byte
     histogram, normalized -- enough to exercise every downstream
     consumer (ANN, dedup, clustering) with real batch mechanics.
     """
     if codec == "real":
         raise NotImplementedError(
-            "compressed audio/video SAMPLE payloads (MP3 layer-III, "
-            "AAC, H.26x) need codec libraries not present in this "
-            "environment; the container demux around them is real "
-            "(operators/container.py), as are decode_wav / decode_ppm "
-            "/ decode_png / decode_gif / decode_jpeg*; or use "
-            "codec='fake16' for the deterministic test codec"
+            "audio/video payloads need external codec libraries, "
+            "which this package does not bundle; the image decoders "
+            "are real (decode_ppm / decode_png / decode_gif / "
+            "decode_bmp / decode_jpeg*); or use codec='fake16' for "
+            "the deterministic test codec"
         )
     if codec != "fake16":
         raise ValueError(f"unknown codec {codec!r}")
@@ -203,29 +196,15 @@ def decode_media(media: DataFrame, codec: str = "real") -> DataFrame:
     return media.select("media_id", "content").mapInPandas(_decode, schema)
 
 
-# ---- real container-format codecs (WAV / PPM) ---------------------
+# ---- real container-format codec (PPM) ----------------------------
 #
-# These are genuine byte-level parsers (RIFF chunk walk, netpbm
-# header tokenizer) running vectorized per Arrow batch -- the same
-# mapInPandas contract a PIL/ffmpeg decode would use. The paired
+# A genuine byte-level parser (netpbm header tokenizer) running
+# vectorized per Arrow batch -- the same mapInPandas contract a
+# PIL/ffmpeg decode would use. The paired
 # synthesize_* harnesses emit deterministic media so the decode
 # output is oracle-checkable: Spark DECODES the actual bytes while
 # the oracle recomputes the expected features from the generator
 # definition -- a real end-to-end proof of the parser.
-
-WAV_FEATURES = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("bits", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("sum_amp", LongType()),
-        StructField("sum_sq", LongType()),
-        StructField("min_amp", IntegerType()),
-        StructField("max_amp", IntegerType()),
-    ]
-)
 
 PPM_FEATURES = StructType(
     [
@@ -239,356 +218,6 @@ PPM_FEATURES = StructType(
         StructField("max_px", IntegerType()),
     ]
 )
-
-
-def synthesize_wav(documents: DataFrame) -> DataFrame:
-    """Deterministic 8-bit mono PCM WAV per document: n_samples =
-    1024 + doc_id % 1024, sample[i] = (doc_id*7 + i*13) % 256,
-    sample_rate 8000. Real RIFF/WAVE container bytes."""
-    import struct
-
-    def _blob(mid: int) -> bytes:
-        n = 1024 + mid % 1024
-        i = np.arange(n, dtype=np.int64)
-        samples = ((mid * 7 + i * 13) % 256).astype(np.uint8)
-        header = (
-            b"RIFF"
-            + struct.pack("<I", 36 + n)
-            + b"WAVE"
-            + b"fmt "
-            + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
-            + b"data"
-            + struct.pack("<I", n)
-        )
-        return header + samples.tobytes()
-
-    return _synthesize_media(documents, _blob)
-
-
-@guard("wav")
-def parse_wav_bytes(blob: bytes) -> tuple[int, int, int, np.ndarray]:
-    """RIFF/WAVE container parse -> (rate, bits, channels, samples).
-
-    Walks arbitrary chunks with word alignment (real encoders emit
-    LIST/INFO chunks between fmt and data), so the parser is not
-    coupled to the synthesizer's minimal layout."""
-    if blob[0:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    fmt = data = None
-    off = 12
-    while off + 8 <= len(blob):
-        cid = blob[off : off + 4]
-        sz = int.from_bytes(blob[off + 4 : off + 8], "little")
-        body = blob[off + 8 : off + 8 + sz]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        off += 8 + sz + (sz & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt /data chunk")
-    channels = int.from_bytes(fmt[2:4], "little")
-    rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if bits != 8:
-        raise ValueError(f"only 8-bit PCM supported, got {bits}")
-    arr = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
-    return rate, bits, channels, arr
-
-
-def decode_wav(media: DataFrame) -> DataFrame:
-    """Real RIFF/WAVE decode: walk chunks (fmt /data with word
-    alignment), read PCM params, extract 8-bit samples, reduce to
-    integer amplitude features (exact under any partitioning)."""
-    _parse = parse_wav_bytes
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in WAV_FEATURES.fields}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                rate, bits, channels, arr = _parse(bytes(blob))
-                rows["media_id"].append(int(mid))
-                rows["sample_rate"].append(rate)
-                rows["bits"].append(bits)
-                rows["channels"].append(channels)
-                rows["n_samples"].append(len(arr))
-                rows["sum_amp"].append(int(arr.sum()))
-                rows["sum_sq"].append(int((arr * arr).sum()))
-                rows["min_amp"].append(int(arr.min()))
-                rows["max_amp"].append(int(arr.max()))
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "content").mapInPandas(_decode, WAV_FEATURES)
-
-
-# --- IMA ADPCM (WAV wFormatTag 0x11) -- real compressed audio,
-# public spec (IMA Digital Audio Focus Group / MS WAVE registry) ----
-
-_IMA_STEPS = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
-    37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
-    157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
-    544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-    1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-    4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
-    12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-    29794, 32767,
-]
-_IMA_INDEX_ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_decode_sample(nibble: int, pred: int, index: int) -> tuple[int, int]:
-    step = _IMA_STEPS[index]
-    diff = step >> 3
-    if nibble & 1:
-        diff += step >> 2
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 4:
-        diff += step
-    if nibble & 8:
-        pred -= diff
-    else:
-        pred += diff
-    pred = max(-32768, min(32767, pred))
-    index = max(0, min(88, index + _IMA_INDEX_ADJ[nibble & 7]))
-    return pred, index
-
-
-def _ima_encode_sample(sample: int, pred: int, index: int) -> tuple[int, int, int]:
-    step = _IMA_STEPS[index]
-    diff = sample - pred
-    nibble = 0
-    if diff < 0:
-        nibble = 8
-        diff = -diff
-    if diff >= step:
-        nibble |= 4
-        diff -= step
-    if diff >= step >> 1:
-        nibble |= 2
-        diff -= step >> 1
-    if diff >= step >> 2:
-        nibble |= 1
-    # track the DECODER's reconstruction so predictors stay in sync
-    pred, index = _ima_decode_sample(nibble, pred, index)
-    return nibble, pred, index
-
-
-def encode_wav_adpcm(
-    samples: np.ndarray,
-    rate: int = 8000,
-    block_samples: int = 505,
-    reset_index_per_block: bool = False,
-) -> bytes:
-    """Mono IMA ADPCM WAV (wFormatTag 0x11): per-block 4-byte header
-    (int16 initial predictor = the block's first sample, uint8 step
-    index, reserved) + 4-bit nibbles low-first for the remaining
-    samples; `fact` chunk records the true sample count so partial
-    final blocks decode exactly. `reset_index_per_block` pins every
-    block header's step index to 0 (useful for exactly-decodable
-    per-block-constant content); default carries the running index."""
-    import struct
-
-    s = [int(v) for v in np.asarray(samples).ravel()]
-    n = len(s)
-    data = bytearray()
-    index = 0
-    pos = 0
-    while pos < n:
-        chunk = s[pos : pos + block_samples]
-        if reset_index_per_block:
-            index = 0
-        pred = chunk[0]
-        data += struct.pack("<hBB", pred, index, 0)
-        rest = chunk[1:]
-        if index == 0 and all(v == pred for v in rest):
-            # constant block at step index 0: every nibble is 0 and
-            # the reconstruction delta is step_table[0] >> 3 == 0 --
-            # skip the per-sample loop (the hot path for the
-            # exactly-decodable synthetic corpus)
-            nibbles = [0] * len(rest)
-        else:
-            nibbles = []
-            for v in rest:
-                nb, pred, index = _ima_encode_sample(v, pred, index)
-                nibbles.append(nb)
-        if len(nibbles) % 2:
-            nibbles.append(0)
-        for lo, hi in zip(nibbles[0::2], nibbles[1::2]):
-            data.append(lo | (hi << 4))
-        pos += block_samples
-    block_align = 4 + (block_samples - 1 + 1) // 2
-    byte_rate = (rate * block_align + block_samples - 1) // block_samples
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, 1, rate, byte_rate, block_align, 4, 2,
-        block_samples,
-    )
-    out = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n)
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out
-
-
-@guard("wav-adpcm")
-def parse_wav_adpcm(blob: bytes) -> tuple[int, np.ndarray]:
-    """Mono IMA ADPCM WAV -> (rate, int64 16-bit samples). Chunk walk
-    with word alignment; block structure from the fmt extension;
-    total length from the fact chunk (falls back to whole blocks)."""
-    if blob[0:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE container")
-    fmt = data = fact = None
-    off = 12
-    while off + 8 <= len(blob):
-        cid = blob[off : off + 4]
-        sz = int.from_bytes(blob[off + 4 : off + 8], "little")
-        body = blob[off + 8 : off + 8 + sz]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact":
-            fact = body
-        off += 8 + sz + (sz & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt /data chunk")
-    tag = int.from_bytes(fmt[0:2], "little")
-    channels = int.from_bytes(fmt[2:4], "little")
-    rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if tag != 0x11 or channels != 1 or bits != 4:
-        raise ValueError(
-            f"only mono 4-bit IMA ADPCM supported (tag=0x{tag:x})"
-        )
-    block_samples = int.from_bytes(fmt[18:20], "little")
-    block_align = int.from_bytes(fmt[12:14], "little")
-    total = (
-        int.from_bytes(fact[0:4], "little") if fact is not None else None
-    )
-    out: list[int] = []
-    for boff in range(0, len(data), block_align):
-        block = data[boff : boff + block_align]
-        if len(block) < 4:
-            break
-        pred = int.from_bytes(block[0:2], "little", signed=True)
-        index = block[2]
-        if index > 88:
-            raise ValueError(f"bad ADPCM step index {index}")
-        out.append(pred)
-        want = block_samples - 1
-        got = 0
-        for b in block[4:]:
-            for nb in (b & 15, b >> 4):
-                if got >= want:
-                    break
-                pred, index = _ima_decode_sample(nb, pred, index)
-                out.append(pred)
-                got += 1
-    if total is not None:
-        out = out[:total]
-    return rate, np.asarray(out, dtype=np.int64)
-
-
-def synthesize_adpcm(documents: DataFrame) -> DataFrame:
-    """Deterministic IMA ADPCM WAV per document: n = 1024 + doc_id %
-    1024 samples in 505-sample blocks, each block CONSTANT at
-    ((doc_id*13 + block*37) % 4096) - 2048. With the header index
-    pinned to 0, a zero diff quantizes to nibble 0 whose
-    reconstruction delta is step_table[0] >> 3 = 0 -- the compressed
-    stream decodes bit-exactly, so the decode oracle is closed-form
-    (the ADPCM analog of the flat-block JPEG trick)."""
-
-    def _blob(mid: int) -> bytes:
-        n = 1024 + mid % 1024
-        i = np.arange(n, dtype=np.int64)
-        vals = ((mid * 13 + (i // 505) * 37) % 4096) - 2048
-        return encode_wav_adpcm(vals, reset_index_per_block=True)
-
-    return _synthesize_media(documents, _blob)
-
-
-def decode_adpcm(media: DataFrame) -> DataFrame:
-    """Real IMA ADPCM decode -> the decode_wav feature shape (bits=4,
-    signed 16-bit amplitude sums)."""
-    _parse = parse_wav_adpcm
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in WAV_FEATURES.fields}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                rate, arr = _parse(bytes(blob))
-                if arr.size == 0:
-                    raise ValueError(
-                        f"zero-sample ADPCM file for media_id={int(mid)}"
-                    )
-                rows["media_id"].append(int(mid))
-                rows["sample_rate"].append(rate)
-                rows["bits"].append(4)
-                rows["channels"].append(1)
-                rows["n_samples"].append(len(arr))
-                rows["sum_amp"].append(int(arr.sum()))
-                rows["sum_sq"].append(int((arr * arr).sum()))
-                rows["min_amp"].append(int(arr.min()))
-                rows["max_amp"].append(int(arr.max()))
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "content").mapInPandas(_decode, WAV_FEATURES)
-
-
-AUDIO_FRAME_FEATURES = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("n", IntegerType()),
-        StructField("sum_amp", LongType()),
-        StructField("sum_sq", LongType()),
-        StructField("peak", IntegerType()),
-    ]
-)
-
-
-def audio_frame_energy(media: DataFrame, frame: int = 256) -> DataFrame:
-    """Windowed audio features over the real WAV decode: split the PCM
-    stream into fixed frames and emit per-frame exact-integer energy
-    (count, amplitude sum, sum of squares, peak) -- the frame ->
-    feature shape of every audio ML front end (RMS/VAD/fingerprint),
-    with integer sums so results are bit-identical under any
-    partitioning. One vectorized reduceat per document; the frame
-    table is the narrow exploded form a 100 TB audio pipeline feeds to
-    downstream aggregation."""
-    _parse = parse_wav_bytes
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in AUDIO_FRAME_FEATURES.fields}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                _, _, _, arr = _parse(bytes(blob))
-                n = len(arr)
-                if n == 0:
-                    continue
-                idx = np.arange(0, n, frame)
-                sums = np.add.reduceat(arr, idx)
-                sqs = np.add.reduceat(arr * arr, idx)
-                peaks = np.maximum.reduceat(arr, idx)
-                counts = np.diff(np.append(idx, n))
-                for f in range(len(idx)):
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(f)
-                    rows["n"].append(int(counts[f]))
-                    rows["sum_amp"].append(int(sums[f]))
-                    rows["sum_sq"].append(int(sqs[f]))
-                    rows["peak"].append(int(peaks[f]))
-            yield pd.DataFrame(rows)
-
-    return (
-        media.select("media_id", "content")
-        .mapInPandas(_frames, AUDIO_FRAME_FEATURES)
-        # lazy ckpt: the sort's sampling job would re-run the decode
-        .transform(ckpt_lazy)
-        .orderBy("media_id", "frame_idx")
-    )
 
 
 def synthesize_ppm(documents: DataFrame) -> DataFrame:
@@ -1645,10 +1274,9 @@ def image_band_stats(media: DataFrame, band_h: int = 4) -> DataFrame:
     """Per-row-band, per-channel pixel stats over the real PPM decode
     -- the tile -> feature shape of image ML front ends (patch
     embedding, banding/letterbox detection), with exact integer sums
-    so results are bit-identical under any partitioning. The image
-    analog of audio_frame_energy: decode once, emit the narrow
-    (media, band, channel) feature table downstream aggregation
-    consumes."""
+    so results are bit-identical under any partitioning: decode once,
+    emit the narrow (media, band, channel) feature table downstream
+    aggregation consumes."""
     _parse = parse_ppm_bytes
 
     def _bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1838,54 +1466,6 @@ def image_dhash_dup_groups(media: DataFrame) -> DataFrame:
     )
 
 
-AUDIO_FP_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_frames", IntegerType()),
-        StructField("fingerprint", LongType()),
-    ]
-)
-
-
-def audio_fingerprint(media: DataFrame, frame: int = 64) -> DataFrame:
-    """Perceptual audio fingerprint -- the energy-delta signature
-    (the bit construction behind Haitsma-Kalker/Shazam-class audio
-    hashing, reduced to one band): exact integer frame energies
-    sum((s-128)^2) over `frame`-sample windows, one bit per
-    consecutive-frame comparison energy[f+1] > energy[f], packed
-    little-endian into a BIGINT (full frames only; files this short
-    stay under 32 bits, so no sign-bit exposure).
-
-    The audio twin of image_dhash: decode once, fingerprint forever;
-    duplicate detection is a groupBy on (n_frames, fingerprint).
-    Integer end to end, so the oracle recomputes it closed-form from
-    the WAV generator.
-    """
-
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "n_frames": [], "fingerprint": []}
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                _rate, _bits, _ch, arr = parse_wav_bytes(bytes(blob))
-                nf = len(arr) // frame
-                seg = (arr[: nf * frame] - 128).reshape(nf, frame)
-                energy = (seg * seg).sum(axis=1)
-                fp = 0
-                for f in range(nf - 1):
-                    if energy[f + 1] > energy[f]:
-                        fp |= 1 << f
-                rows["media_id"].append(int(mid))
-                rows["n_frames"].append(int(nf))
-                rows["fingerprint"].append(int(fp))
-            yield pd.DataFrame(rows)
-
-    return (
-        media.select("media_id", "content")
-        .mapInPandas(_fp, AUDIO_FP_SCHEMA)
-        .transform(ckpt_lazy)
-        .orderBy("media_id")
-    )
-# appended to multimodal.py
 
 
 # --- progressive JPEG (SOF2, ITU-T T.81 Annex G) -- grayscale ---
@@ -1899,9 +1479,8 @@ def audio_fingerprint(media: DataFrame, frame: int = 64) -> DataFrame:
 # decoder (DC first/refine, AC first with EOBRUN, AC refinement with
 # correction bits) whose output is BIT-IDENTICAL to the baseline
 # decoder over the same quantized coefficients -- the differential
-# test any image passes, not just gate content. Grayscale only;
-# progressive COLOR (interleaved DC scans) remains with mp3/mp4 in
-# the documented-missing tier.
+# test any image passes, not just gate content. The color twin
+# (interleaved DC scans) shares the same scan machinery.
 
 # progressive AC table: all 176 (run, size) symbols incl. EOBn
 # (s == 0, r 0..14) and ZRL (0xF0) at one fixed 8-bit length

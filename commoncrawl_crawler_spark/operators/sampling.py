@@ -44,62 +44,6 @@ def hash_sample(
     return df.filter(_md5_bucket(F.col(key_col), buckets) < rate_per_mille)
 
 
-def stratified_sample_report(
-    documents: DataFrame, rate_per_mille: int = 200
-) -> DataFrame:
-    """Gate query: deterministic sample of documents + per-(lang,
-    source) accounting of kept vs total -- the report a pipeline
-    emits to prove a split is unbiased across strata."""
-    kept = (_md5_bucket(F.col("doc_id"), 1000) < rate_per_mille).cast("bigint")
-    return (
-        documents.select("lang", "source", kept.alias("kept"), "n_chars")
-        .groupBy("lang", "source")
-        .agg(
-            F.sum("kept").alias("kept_docs"),
-            F.count(F.lit(1)).alias("total_docs"),
-            F.coalesce(
-                F.sum(F.when(F.col("kept") == 1, F.col("n_chars"))), F.lit(0)
-            ).alias("kept_chars"),
-        )
-        .orderBy("lang", "source")
-    )
-
-
-def group_quota_sample(
-    df: DataFrame, group_cols: list[str], key_col: str, quota: int
-) -> DataFrame:
-    """At most `quota` rows per group, chosen by md5-hash order.
-
-    The anti-dominance operator: a domain with 10^9 pages and one
-    with 10^3 both contribute <= quota rows, and WHICH rows is a
-    deterministic pseudo-random choice (hash order), not "first by
-    storage order". One shuffle on the group key; AQE splits skewed
-    groups. Reference analog: BundleGenerator's urls-per-host cap,
-    except the reference keeps list order while this keeps a seeded
-    random subset -- the right choice for training data.
-    """
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(_md5_bucket(F.col(key_col), 1 << 30), F.col(key_col))
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= quota)
-        .drop("_rn")
-    )
-
-
-def source_quota_report(documents: DataFrame, quota: int = 20) -> DataFrame:
-    """Gate query: per-source quota sample of documents, returned as
-    the kept (doc_id, source) pairs so the oracle checks the exact
-    chosen set, not just counts."""
-    return (
-        group_quota_sample(documents, ["source"], "doc_id", quota)
-        .select("doc_id", "source", "lang")
-        .orderBy("doc_id")
-    )
-
-
 def mixture_plan(
     documents: DataFrame,
     weights: DataFrame,
@@ -198,8 +142,8 @@ def weighted_quota_sample(
     or null are never sampled (zero weight = zero probability).
 
     One shuffle on the group key, top-k via the rank window -- the
-    same shape as group_quota_sample. Adds `_priority` (the micro-unit
-    cost, bigint) to the output for auditability.
+    same shape as the reference's per-host top-k. Adds `_priority`
+    (the micro-unit cost, bigint) to the output for auditability.
     """
     m = 1 << 30
     u = (_md5_bucket(F.col(key_col), m) + 1) / F.lit(float(m + 1))

@@ -90,17 +90,6 @@ def regex_token_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-def winnow_fingerprint_rows(documents: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
-    """One row per (doc_id, winnowing fingerprint). The exploded form
-    is what a fingerprint-index join consumes: two documents sharing
-    any >= k+w-1-char substring share at least one row here."""
-    fps = documents.select(
-        "doc_id",
-        text.winnow_fingerprints_expr(F.col("text"), k=k, w=w).alias("fps"),
-    )
-    return fps.select("doc_id", F.explode("fps").alias("fp")).orderBy("doc_id", "fp")
-
-
 def winnow_fingerprint_profile(documents: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Per-document checksum of the winnowing fingerprint SET:
     count + bit_xor + min + max. Verifies the whole selected set
@@ -1643,8 +1632,9 @@ def corpus_heaps_profile(
 def render_line_corpus(documents: DataFrame, line_tokens: int = 12) -> DataFrame:
     """Deterministic line-corpus rendering for the C4 cleaning gate:
     the synthetic documents table has no newlines or punctuation, so
-    (like the mm_* gates' synthesized media) this derives a plausible
-    line corpus from it -- fixed-width token windows as lines, with
+    (like the fixture bytes `sources.packfiles._synthesize_media`
+    builds per doc_id) this derives a plausible line corpus from it
+    -- fixed-width token windows as lines, with
     md5-keyed decorations that exercise every C4 rule:
 
     - ~90% of lines get a terminal '.' (h % 10 != 0 lacks one);

@@ -1,9 +1,10 @@
-"""The engine core loads no media module.
+"""The engine core loads no module from outside the crawler core.
 
 The segment pass, the query server and the recrawl path import the
-ten modules below. None of them may pull in a media decoder: those
-live outside the crawler core, and deleting them must never change
-what the core runs. Checked in a fresh interpreter, so modules other
+ten modules below. None of them may pull in a media decoder or a
+module of the LLM-data, vector-search or session tiers: those live
+outside the crawler core, and deleting them must never change what
+the core runs. Checked in a fresh interpreter, so modules other
 tests already imported cannot hide or fake a load.
 """
 
@@ -29,10 +30,15 @@ CORE = [
     "streaming.jobs",
 ]
 
-MEDIA = [
+OUTSIDE_CORE = [
     "operators.multimodal",
-    "operators.container",
     "sources.packfiles",
+    "operators.bpe",
+    "operators.tokenizers",
+    "operators.sampling",
+    "operators.corpus",
+    "operators.similarity",
+    "operators.sessions",
 ]
 
 _PROBE = """
@@ -56,6 +62,8 @@ def test_engine_core_imports_no_media_module():
     loaded = set(probe["modules"])
     for name in CORE:
         assert f"commoncrawl_crawler_spark.{name}" in loaded
-    leaked = [m for m in MEDIA if f"commoncrawl_crawler_spark.{m}" in loaded]
-    assert not leaked, f"engine core imports media modules: {leaked}"
+    leaked = [
+        m for m in OUTSIDE_CORE if f"commoncrawl_crawler_spark.{m}" in loaded
+    ]
+    assert not leaked, f"engine core imports non-core modules: {leaked}"
     assert not probe["spark"], "importing the engine core started Spark"

@@ -74,35 +74,6 @@ def test_resize_stub_fixed_shape(spark, sf_smoke):
     assert all(r["width"] == 8 and r["height"] == 4 for r in thumbs)
 
 
-def test_wav_parser_handles_extra_chunks_and_padding():
-    """The chunk walker must skip unknown chunks (real encoders emit
-    LIST/INFO) and honor word alignment for odd-size chunk bodies."""
-    import struct
-
-    samples = bytes(range(100))
-    odd_chunk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"  # pad
-    body = (
-        b"WAVE"
-        + odd_chunk
-        + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, 44100, 44100, 1, 8)
-        + b"data"
-        + struct.pack("<I", len(samples))
-        + samples
-    )
-    blob = b"RIFF" + struct.pack("<I", len(body)) + body
-    rate, bits, channels, arr = multimodal.parse_wav_bytes(blob)
-    assert (rate, bits, channels) == (44100, 8, 1)
-    assert arr.tolist() == list(range(100))
-
-
-def test_wav_parser_rejects_garbage():
-    with pytest.raises(ValueError):
-        multimodal.parse_wav_bytes(b"OggS" + b"\x00" * 64)
-    with pytest.raises(ValueError):  # RIFF but no data chunk
-        multimodal.parse_wav_bytes(b"RIFF\x04\x00\x00\x00WAVE")
-
-
 def test_ppm_parser_handles_header_comments():
     pixels = bytes(range(2 * 2 * 3))
     blob = b"P6\n# creator: some-tool\n2 2\n255\n" + pixels
@@ -114,20 +85,6 @@ def test_ppm_parser_handles_header_comments():
 def test_ppm_parser_rejects_garbage():
     with pytest.raises(ValueError):
         multimodal.parse_ppm_bytes(b"P5\n2 2\n255\n" + b"\x00" * 4)
-
-
-def test_wav_roundtrip_decode_matches_formula(spark, sf_smoke):
-    docs = load_table(spark, "documents", sf_smoke).limit(5)
-    rows = multimodal.decode_wav(multimodal.synthesize_wav(docs)).collect()
-    assert len(rows) == 5
-    for r in rows:
-        mid, n = r["media_id"], r["n_samples"]
-        assert n == 1024 + mid % 1024
-        i = np.arange(n, dtype=np.int64)
-        expect = (mid * 7 + i * 13) % 256
-        assert r["sum_amp"] == int(expect.sum())
-        assert r["sum_sq"] == int((expect * expect).sum())
-        assert r["sample_rate"] == 8000
 
 
 def test_ppm_roundtrip_decode_matches_formula(spark, sf_smoke):
@@ -152,33 +109,6 @@ def test_ppm_parser_rejects_truncated_input():
         multimodal.parse_ppm_bytes(b"P6\n# no newline after this")
     with pytest.raises(ValueError):  # pixel frame shorter than w*h*3
         multimodal.parse_ppm_bytes(b"P6\n2 2\n255\n" + b"\x00" * 5)
-
-
-def test_audio_frame_energy_exact_frames(spark):
-    """Frames tile the PCM stream exactly: counts sum to n_samples,
-    the last partial frame keeps its true length, and per-frame sums
-    match a numpy reference."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=3, text="x"), Row(doc_id=7, text="y")]
-    )
-    media = multimodal.synthesize_wav(docs)
-    out = multimodal.audio_frame_energy(media, frame=256).collect()
-    by_media = {}
-    for r in out:
-        by_media.setdefault(r.media_id, []).append(r)
-    for mid, rows in by_media.items():
-        n = 1024 + mid % 1024
-        ref = (mid * 7 + np.arange(n) * 13) % 256
-        assert sum(r.n for r in rows) == n
-        assert [r.frame_idx for r in rows] == list(range(len(rows)))
-        for r in rows:
-            seg = ref[r.frame_idx * 256 : r.frame_idx * 256 + r.n]
-            assert r.sum_amp == int(seg.sum())
-            assert r.sum_sq == int((seg * seg).sum())
-            assert r.peak == int(seg.max())
 
 
 def test_image_band_stats_tile_exactness(spark):
@@ -550,99 +480,6 @@ def test_jpeg_420_partial_mcu_dimensions():
     assert len({tuple(rgb[i : i + 3]) for i in range(0, len(rgb), 3)}) == 1
 
 
-# --- IMA ADPCM (WAV 0x11, real compressed audio) ---
-
-
-def test_adpcm_per_block_constant_bit_exact():
-    import numpy as np
-
-    n = 1700
-    i = np.arange(n, dtype=np.int64)
-    vals = ((5 * 13 + (i // 505) * 37) % 4096) - 2048
-    rate, arr = multimodal.parse_wav_adpcm(
-        multimodal.encode_wav_adpcm(vals, reset_index_per_block=True)
-    )
-    assert rate == 8000 and len(arr) == n
-    assert (arr == vals).all()
-
-
-def test_adpcm_decoder_matches_independent_spec_model():
-    """Decode a stream with REAL nonzero nibbles and compare against
-    a from-the-spec IMA model written independently here."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    sig = np.cumsum(rng.randint(-500, 501, size=900)).clip(-32768, 32767)
-    blob = multimodal.encode_wav_adpcm(sig, block_samples=505)
-    _, got = multimodal.parse_wav_adpcm(blob)
-
-    steps = multimodal._IMA_STEPS
-    adj = [-1, -1, -1, -1, 2, 4, 6, 8]
-    # locate the data chunk and replay it
-    off = 12
-    data = fact = None
-    while off + 8 <= len(blob):
-        cid = blob[off : off + 4]
-        sz = int.from_bytes(blob[off + 4 : off + 8], "little")
-        if cid == b"data":
-            data = blob[off + 8 : off + 8 + sz]
-        if cid == b"fact":
-            fact = int.from_bytes(blob[off + 8 : off + 12], "little")
-        off += 8 + sz + (sz & 1)
-    out = []
-    block_align = 4 + 252
-    for boff in range(0, len(data), block_align):
-        block = data[boff : boff + block_align]
-        pred = int.from_bytes(block[0:2], "little", signed=True)
-        index = block[2]
-        out.append(pred)
-        emitted = 0
-        for byte in block[4:]:
-            for nb in (byte & 15, byte >> 4):
-                if emitted >= 504:
-                    break
-                step = steps[index]
-                d = step >> 3
-                if nb & 1:
-                    d += step >> 2
-                if nb & 2:
-                    d += step >> 1
-                if nb & 4:
-                    d += step
-                pred = pred - d if nb & 8 else pred + d
-                pred = max(-32768, min(32767, pred))
-                index = max(0, min(88, index + adj[nb & 7]))
-                out.append(pred)
-                emitted += 1
-    assert list(got) == out[:fact]
-
-
-def test_adpcm_tracks_smooth_signal():
-    import numpy as np
-
-    t = np.arange(2000)
-    sig = (8000 * np.sin(t / 40.0)).astype(np.int64)
-    _, dec = multimodal.parse_wav_adpcm(multimodal.encode_wav_adpcm(sig))
-    # steady-state tracking error stays well under the signal swing
-    assert np.abs(dec[50:] - sig[50:]).max() < 600
-
-
-def test_adpcm_rejects_non_adpcm_and_bad_index():
-    import numpy as np
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="RIFF"):
-        multimodal.parse_wav_adpcm(b"garbage!")
-    blob = bytearray(
-        multimodal.encode_wav_adpcm(np.zeros(600, dtype=np.int64))
-    )
-    # corrupt the first block's step index past 88
-    data_at = bytes(blob).index(b"data") + 8
-    blob[data_at + 2] = 99
-    with _pytest.raises(ValueError, match="index"):
-        multimodal.parse_wav_adpcm(bytes(blob))
-
-
 def test_dhash_invariances(spark):
     """dHash must be invariant to uniform brightness shift (gradient
     comparisons unchanged) and sensitive to gradient reversal."""
@@ -670,38 +507,6 @@ def test_dhash_invariances(spark):
     groups = mm.image_dhash_dup_groups(media).collect()
     assert len(groups) == 1 and groups[0]["n_images"] == 2
     assert groups[0]["min_media_id"] == 0
-
-
-def test_audio_fingerprint_semantics(spark):
-    """Quiet->loud yields rising-energy bits; identical signals share
-    a fingerprint; a reversed envelope differs."""
-    import struct
-
-    import numpy as np
-
-    from commoncrawl_crawler_spark.operators import multimodal as mm
-
-    def wav(mid, samples):
-        n = len(samples)
-        header = (
-            b"RIFF" + struct.pack("<I", 36 + n) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
-            + b"data" + struct.pack("<I", n)
-        )
-        return (mid, "audio/wav",
-                header + np.asarray(samples, dtype=np.uint8).tobytes())
-
-    quiet = [128, 129] * 32            # near-zero energy frame
-    loud = [28, 228] * 32              # high energy frame
-    rising = quiet + quiet + loud + loud
-    rows = [wav(0, rising), wav(1, rising), wav(2, rising[::-1])]
-    media = spark.createDataFrame(rows, ["media_id", "mime", "content"])
-    got = {r["media_id"]: (r["n_frames"], r["fingerprint"])
-           for r in mm.audio_fingerprint(media, frame=64).collect()}
-    assert got[0] == got[1]
-    assert got[0] != got[2]
-    # 4 frames: energies q,q,L,L -> bits (f1>f0)=0, (f2>f1)=1, (f3>f2)=0
-    assert got[0] == (4, 0b010)
 
 
 # --- progressive JPEG (SOF2) -------------------------------------------

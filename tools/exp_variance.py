@@ -41,7 +41,6 @@ QUERIES = [
     "sim_pq_trained_topk",
     "dedup_ngram_jaccard",
     "graph_triangles",
-    "mm_audio_energy",
     "graph_random_walks",
     "text_paragraph_dedup",
 ]

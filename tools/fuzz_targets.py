@@ -27,7 +27,6 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-from commoncrawl_crawler_spark.operators import container as ct
 from commoncrawl_crawler_spark.operators import multimodal as mm
 from commoncrawl_crawler_spark.sources import archive as ar
 from commoncrawl_crawler_spark.sources import packfiles as pk
@@ -50,33 +49,6 @@ def _rgb_flat(w: int, h: int, mid: int = 1) -> np.ndarray:
 
 
 # --- images ---------------------------------------------------------
-
-def _wav_seed(mid: int) -> bytes:
-    import struct
-
-    n = 1024 + mid % 1024
-    i = np.arange(n, dtype=np.int64)
-    samples = ((mid * 7 + i * 13) % 256).astype(np.uint8)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + n) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
-        + b"data" + struct.pack("<I", n) + samples.tobytes()
-    )
-
-
-_target("wav", lambda: [_wav_seed(m) for m in (1, 2)], mm.parse_wav_bytes)
-
-_target(
-    "wav_adpcm",
-    lambda: [
-        mm.encode_wav_adpcm(
-            ((np.arange(1024) // 505 * 37 + m * 13) % 4096) - 2048,
-            reset_index_per_block=True,
-        )
-        for m in (1, 2)
-    ],
-    mm.parse_wav_adpcm,
-)
 
 _target(
     "ppm",
@@ -149,79 +121,6 @@ _target(
     "bmp",
     lambda: [mm.encode_bmp_bytes(12, 9, _rgb_flat(12, 9))],
     mm.parse_bmp_bytes,
-)
-
-# --- containers / audio ---------------------------------------------
-
-_target(
-    "mp4",
-    lambda: [ct._mp4_blob(m) for m in (1, 2)],
-    ct.parse_mp4_tracks,
-)
-
-_target(
-    "fmp4",
-    lambda: [ct._fmp4_blob(m) for m in (1, 2)],
-    ct.parse_fmp4_fragments,
-)
-
-_target(
-    "mpeg_audio_framing",
-    lambda: [ct._mp3_blob(1), ct._mpeg2_blob(1)],
-    ct.parse_mpeg_audio_frames,
-)
-
-
-def _decode_mpeg_layers(blob: bytes):
-    """Framing walk + per-frame sample decode -- the decode_layer1/2
-    DF path below the Arrow batching."""
-    skip, frames = ct.parse_mpeg_audio_frames(blob)
-    out = []
-    for fr in frames:
-        frame = blob[fr["offset"] : fr["offset"] + fr["length"]]
-        if fr["layer"] == 1:
-            out.append(ct.decode_mpeg1_layer1_frame(frame))
-        elif fr["layer"] == 2:
-            out.append(ct.decode_mpeg1_layer2_frame(frame))
-    return out
-
-
-_target(
-    "mpeg_layer12_decode",
-    lambda: [ct._layer1_blob(1), ct._layer2_blob(1)],
-    _decode_mpeg_layers,
-)
-
-def _mp3si_seed(mid: int) -> bytes:
-    # side-info body = everything after the 4-byte frame header
-    return ct._mp3si_blob(mid)[4:25]
-
-
-_target(
-    "mp3_sideinfo",
-    lambda: [_mp3si_seed(1), _mp3si_seed(2)],
-    ct.parse_mp3_sideinfo_mono,
-)
-
-_target(
-    "exif_tiff",
-    lambda: [
-        ct.build_exif_tiff("II", 640, 480, 1, "maker", 100, (28, 10)),
-        ct.build_exif_tiff("MM", 320, 240, 6, "other", 400, (18, 10)),
-    ],
-    ct.parse_exif_tiff,
-)
-
-_target(
-    "ico",
-    lambda: [ct._ico_blob(m) for m in (1, 2)],
-    ct.parse_ico_entries,
-)
-
-_target(
-    "id3v2",
-    lambda: [ct._id3_mp3_blob(m) for m in (1, 2)],
-    ct.parse_id3v2_frames,
 )
 
 # --- pack files / text manifests ------------------------------------
